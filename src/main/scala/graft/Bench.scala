@@ -223,7 +223,7 @@ object Bench {
     // runs cpus=32 against a cpus=4 default and reads
     // `common: 0, ratio: null` exactly where the machine-checkable
     // promotion rule matters; (2) the bench WRITES BENCH_FULL.json at
-    // the end of every run (see outPath below), so the un-keyed
+    // the end of every full run (see outPath below), so the un-keyed
     // default is the previous session's output, not a curated
     // canonical — the r11 driver session (drifted, sentinel 1.675)
     // overwrote it in place.
@@ -317,8 +317,12 @@ object Bench {
     //              (~800 bytes, fits any sane tail bound);
     //   file(s) -> the UNTRUNCATED record with the full per-query
     //              min and median maps.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "BENCH_FULL.json")
+    // A subset run without SPARK_GRAFT_BENCH_OUT writes no record:
+    // canonical resolution still falls back to the un-keyed
+    // BENCH_FULL.json, so a partial map there would become the next
+    // full run's baseline.
+    val outPath: Option[String] = sys.env.get("SPARK_GRAFT_BENCH_OUT")
+      .orElse(if (only.isEmpty) Some("BENCH_FULL.json") else None)
     // cpus-keyed full record (VERDICT r14 #2: the c8 run clobbered
     // the c32 record — both wrote BENCH_FULL.json): written on every
     // FULL-surface default run, so each core count keeps its latest
@@ -330,7 +334,8 @@ object Bench {
       if (only.isEmpty && !sys.env.contains("SPARK_GRAFT_BENCH_OUT"))
         for { b <- sfBase; c <- cpusNum } yield s"$b.cpus$c.json"
       else None
-    val queriesFileJson = s""""${keyedOut.getOrElse(outPath)}""""
+    val queriesFileJson =
+      keyedOut.orElse(outPath).map(p => s""""$p"""").getOrElse("null")
     val compactLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpusJson,"record_ok":$recordOk,"n_queries":${results.size},"drift":$driftJson,"canon":$canonJson,"queries_file":$queriesFileJson,"failed":$failedJson,"sf":"$sfDir"}"""
     val fullLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpusJson,"record_ok":$recordOk,"n_queries":${results.size},"drift":$driftJson,"canon":$canonJson,"queries":$qs,"queries_median":$qsMed,"failed":$failedJson,"sf":"$sfDir"}"""
     println(compactLine)
@@ -338,7 +343,7 @@ object Bench {
     // bench (VERDICT r4 #7). SPARK_GRAFT_BENCH_OUT redirects the
     // record so a scale/experiment run can never clobber the
     // canonical sf0.1 file (VERDICT r5 #2).
-    (Seq(outPath) ++ keyedOut).distinct.foreach { p =>
+    (outPath.toSeq ++ keyedOut).distinct.foreach { p =>
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get(p), fullLine + "\n")
       catch { case scala.util.control.NonFatal(e) =>

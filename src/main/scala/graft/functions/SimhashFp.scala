@@ -17,17 +17,22 @@ import org.apache.spark.unsafe.types.UTF8String
   * digest, a 32-char hex rendering, a 15-char substring, a string→long
   * `conv` parse, and TWO 15-element array allocations in the fold
   * (guide §1.2). Here each distinct word is one reused-digest md5 and
-  * the votes accumulate in a primitive int[60].
+  * the votes accumulate in a primitive int[Bits].
   *
-  * BIT-IDENTICAL semantics, spec-pinned against the composition:
+  * BIT-IDENTICAL to the composition for documents with fewer than
+  * 2^16 distinct words, spec-pinned. The composition packed four
+  * 16-bit vote counters per long, so at 2^16 or more distinct words
+  * its counters overflow into their neighbours and its fingerprint
+  * differs from this loop's exact int counts (an index persisted by
+  * the composition holds the overflowed value for such documents).
+  * Semantics, with D = `Bits`/4 hex digits:
   *  - distinct words (set semantics — vote counts and nw use the
   *    distinct count, order irrelevant);
-  *  - word value = leading 15 md5 hex nibbles as a long — i.e. the
-  *    first 8 digest bytes read big-endian, shifted right 4 (16
-  *    nibbles minus one);
+  *  - word value = leading D md5 hex nibbles as a long — i.e. the
+  *    first 8 digest bytes read big-endian, shifted right 64 − `Bits`;
   *  - bit (4p + b) of the fingerprint is set when
   *    2 · (#words whose digit p has bit b set) >= nw, where digit p is
-  *    hex position p+1, i.e. value bits [4·(14−p), +3] — the `vote*2
+  *    hex position p+1, i.e. value bits [4·(D−1−p), +3] — the `vote*2
   *    >= nw` majority with the exact tie behavior of the composition
   *    (including the degenerate empty-array case: nw = 0 sets every
   *    bit);
@@ -62,7 +67,12 @@ case class SimhashFpExpr(child: Expression) extends UnaryExpression {
 
 object SimhashFp {
 
-  val Bits = 60
+  /** Fingerprint width; the banding and the oracle read the same
+    * constant. A whole number of hex digits, at most the 64 bits the
+    * leading 8 digest bytes give. */
+  val Bits: Int = graft.pipeline.DedupOps.SimhashBits
+  require(Bits % 4 == 0 && Bits <= 64, s"simhash width $Bits")
+  private val LastDigit = Bits / 4 - 1
 
   private val localMd5: ThreadLocal[java.security.MessageDigest] =
     ThreadLocal.withInitial(() =>
@@ -84,17 +94,17 @@ object SimhashFp {
         nw += 1
         md.reset()
         val dig = md.digest(w.getBytes)
-        // leading 15 hex nibbles as a long = first 8 bytes big-endian,
-        // dropped low nibble
+        // leading Bits/4 hex nibbles as a long = first 8 bytes
+        // big-endian, low 64 - Bits bits dropped
         var v = 0L
         var b = 0
         while (b < 8) { v = (v << 8) | (dig(b) & 0xffL); b += 1 }
-        v = v >>> 4
-        // bit (4p + b) votes on value bit 4*(14-p) + b
+        v = v >>> (64 - Bits)
+        // bit (4p + b) votes on value bit 4*(LastDigit-p) + b
         var bit = 0
         while (bit < Bits) {
           val p = bit / 4
-          if (((v >>> (4 * (14 - p) + bit % 4)) & 1L) != 0L)
+          if (((v >>> (4 * (LastDigit - p) + bit % 4)) & 1L) != 0L)
             votes(bit) += 1
           bit += 1
         }

@@ -207,13 +207,9 @@ object DedupOps {
     * bit b of hex digit p of md5(word). Pure integer arithmetic →
     * engine-portable.
     *
-    * Entirely map-side: each document folds over its distinct-word
-    * array, accumulating all 32 bit-votes in 8 packed longs (the 4 votes
-    * of hex digit p spread at 16-bit offsets — a vote count fits 16 bits
-    * for any document under 65k distinct words), and the aggregate's
-    * finish lambda turns votes into the fingerprint. No explode, no
-    * vocabulary join, no groupBy — signature computation never shuffles,
-    * regardless of corpus size.
+    * Entirely map-side: each document is one `simhash_fp` call over its
+    * token array. No explode, no vocabulary join, no groupBy —
+    * signature computation never shuffles, regardless of corpus size.
     */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame =
     // ONE JVM loop per document (r15, graft.functions.SimhashFp) —
@@ -221,8 +217,9 @@ object DedupOps {
     // conv(substring(md5(w),1,15),16,10) → aggregate/zip_with vote
     // fold) paid a one-shot digest + hex render + string conv parse +
     // two 15-long array allocations PER WORD (guide §1.2).
-    // Bit-identical fingerprints, spec-pinned (SimhashFpSpec); the
-    // DuckDB oracle replays the same digit-wise math unchanged.
+    // Bit-identical fingerprints for documents under 2^16 distinct
+    // words (see SimhashFp), spec-pinned (SimhashFpSpec); the DuckDB
+    // oracle replays the same digit-wise math unchanged.
     df.select(col(idCol).as("id"),
       graft.functions.SimhashFp.simhashFp(
         TextOps.wsTokens(col(textCol))).as("simhash"))

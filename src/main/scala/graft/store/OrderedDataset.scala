@@ -1190,10 +1190,14 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
       // duplicate upserts (every AggStream merge write supersedes most
       // of the slice it rewrites) would otherwise land every file near
       // half target — permanently off-target with nothing to coalesce
-      // them. One extra bounded job over the merge slice ∪ batch.
-      val totalIn = opts.duplicatesOn match {
-        case Some(_) => deduped.count()
-        case None    => rewrite.map(_.rows).sum + batchRows
+      // them. The count re-runs the dedup lineage over the merge slice
+      // ∪ batch, so it runs only when it can change the file count:
+      // never for a TimePeriod target (materialize sizes by period, not
+      // by rows), and not when even the pre-dedup bound fits one file.
+      val rowsBound = rewrite.map(_.rows).sum + batchRows
+      val totalIn = (opts.duplicatesOn, opts.target) match {
+        case (Some(_), NRows(n)) if rowsBound > n => deduped.count()
+        case _ => rowsBound
       }
       materialize(deduped, totalIn, rewrite, kept, m0, opts, ordType,
         hasProvenance = true, optimistic = optimistic)
@@ -1332,7 +1336,14 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     // min/max (Delta-style data skipping; see ColStat for the string
     // prefix/truncation rules) in the SAME pass — one read of the
     // just-written (page-cache-warm) tmp files either way.
-    val readBack = spark.read.parquet(tmpDir)
+    // read back through the schema just written (the one the sidecar
+    // stores): no footer-inference job on the tmp dir
+    val writtenSchema =
+      (if (hasProvenance) data.drop(SeqCol, RidCol) else data).schema
+    val readBack = spark.read
+      .schema(org.apache.spark.sql.graftbridge.SparkInternals
+        .asNullable(writtenSchema))
+      .parquet(tmpDir)
     val statCols: Seq[StructField] =
       if (!opts.colStats) Nil
       else readBack.schema.fields.toSeq
@@ -1461,11 +1472,9 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
       else Map(OrderedDataset.SketchColsKey -> effSketchCols.mkString(","))
     val newKv = m0.map(_.kv).getOrElse(Map.empty) ++ bloomKv ++
       clusterKv ++ sketchKv ++ opts.kv -- opts.kvRemove
-    val schemaJson =
-      (if (hasProvenance) data.drop(SeqCol, RidCol) else data).schema.json
     Sidecar.write(conf, dir,
       DatasetMeta(opts.orderedOn, ordType, allStats, newKv, nextId,
-        schemaJson))
+        writtenSchema.json))
     // RETIRE replaced files instead of deleting them: readers that
     // resolved their file list against the previous sidecar keep reading
     // until the grace window passes (cleanOrphans reaps them under a

@@ -133,7 +133,9 @@ final class AggStream[K](
     val partial = binned.groupBy(groupCols: _*)
       .agg(exprs.head, exprs.tail: _*).persist()
     try {
-      if (partial.isEmpty) {
+      // one action: emptiness, the merge-read bound and the row count
+      val stats = partial.agg(min(BinCol), sum(NCol), count(lit(1))).head()
+      if (stats.getLong(2) == 0) {
         // persist restart AND pre state so this key stays aligned with
         // the keys that did see rows (a dropped extraKv here would wedge
         // the next construction's pre-state agreement check)
@@ -141,7 +143,6 @@ final class AggStream[K](
           ds.updateKv(extraKv ++ Map(StateKey -> restart.toJson))
         return
       }
-      val stats = partial.agg(min(BinCol), sum(NCol)).head()
       val minBin = OrdVal.fromAny(stats.get(0))
       val chunkRows = stats.getLong(1)
       val merged =
@@ -174,16 +175,17 @@ final class AggStream[K](
       .agg(partialExprs(cfg).head, partialExprs(cfg).tail: _*)
       .persist()
     try {
-      if (partial.isEmpty) {
+      // one action: emptiness and the merge-read bound
+      val stats = partial.agg(min(BinCol), count(lit(1))).head()
+      val ds = store.get(k)
+      if (stats.getLong(1) == 0) {
         // still persist the restart index (and pre state) so all keys
         // stay aligned
-        val ds = store.get(k)
         if (ds.exists)
           ds.updateKv(extraKv ++ Map(StateKey -> restart.toJson))
         return
       }
-      val minBin = OrdVal.fromAny(partial.agg(min(BinCol)).head().get(0))
-      val ds = store.get(k)
+      val minBin = OrdVal.fromAny(stats.get(0))
       val merged =
         if (!ds.exists) partial
         else {

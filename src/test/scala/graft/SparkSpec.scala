@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -10,9 +13,61 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
+
+  /** Call sites of the Spark jobs `body` starts on this thread, in
+    * start order. Jobs of concurrently running specs are told apart by
+    * a job group private to this call. A job run for a SQL execution
+    * takes the execution's call site: adaptive execution submits its
+    * stage jobs from pool threads, whose own stacks name no caller. */
+  def jobSites(body: => Unit): Seq[SparkSpec.JobSite] = {
+    val sc = spark.sparkContext
+    val group = s"jobSites-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[
+      (Option[String], String)]()
+    val execSites =
+      new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add((Option(e.properties.getProperty("spark.sql.execution.id")),
+            e.stageInfos.maxBy(_.stageId).details)): Unit
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          execSites.put(x.executionId.toString, x.details): Unit
+        case _ => ()
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.toArray(Array.empty[(Option[String], String)]).toSeq.map {
+      case (exec, details) => SparkSpec.JobSite(
+        exec.flatMap(id => Option(execSites.get(id))).getOrElse(details))
+    }
+  }
 }
 
 object SparkSpec {
+  /** A job's call site from its long form: the Spark API frame that
+    * started it (`sparkFrame`, e.g. `...Dataset.count`) and the first
+    * frame of the caller (`userFrame`, e.g.
+    * `graft.store.OrderedDataset.writeBody(OrderedDataset.scala:1199)`). */
+  final case class JobSite(longForm: String) {
+    private val frames = longForm.split("\n").map(_.trim)
+    private val sparkFrame = frames.head.takeWhile(_ != '(')
+    private val userFrame = frames.lift(1).getOrElse("")
+    /** True when `method` of the Spark API started this job from a call
+      * in `file` — line numbers deliberately not compared. */
+    def is(method: String, file: String): Boolean =
+      sparkFrame.endsWith(s".$method") && userFrame.contains(s"($file:")
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -460,6 +460,69 @@ class StoreSpec extends SparkSpec {
     assert(ds.df.agg(sum("v")).head.getDouble(0) == (0 until 100).map(_ * 2.0).sum)
   }
 
+  // jobs of a commit that cannot change its result are not run: the
+  // post-dedup count only when it can change the file count, and no
+  // parquet footer inference when reading the written files back
+  private val Here = "OrderedDataset.scala"
+  private def countJobs(sites: Seq[graft.SparkSpec.JobSite]) =
+    sites.filter(_.is("count", Here))
+  private def inferenceJobs(sites: Seq[graft.SparkSpec.JobSite]) =
+    sites.filter(_.is("DataFrameReader.parquet", Here))
+  private def keepLast(n: Long) =
+    WriteOpts("t", NRows(n), duplicatesOn = Some(Seq("t")))
+
+  test("a one-file keep-last append runs no dedup count or schema inference") {
+    val ds = new OrderedDataset(spark, tmpDir("fewjobs"))
+    ds.write(tsDf((0L until 10L).map(i => (i, 1.0))), keepLast(100))
+    val sites = jobSites {
+      ds.write(tsDf((10L until 20L).map(i => (i, 2.0))), keepLast(100))
+    }
+    // the stats readback is still there: the matcher sees this file
+    assert(sites.exists(_.is("collect", Here)), sites)
+    assert(countJobs(sites).isEmpty, sites)
+    assert(inferenceJobs(sites).isEmpty, sites)
+    // the tail append adds one file and rewrites none
+    assert(ds.meta.files.map(_.rows) == Seq(10L, 10L))
+  }
+
+  test("dedup count is skipped when the pre-dedup bound is exactly n") {
+    val ds = new OrderedDataset(spark, tmpDir("boundn"))
+    ds.write(tsDf((0L until 30L).map(i => (i, 1.0))), keepLast(50))
+    // rewrite 30 rows + batch 20 rows = 50 = n: one file either way
+    val sites = jobSites {
+      ds.write(tsDf((20L until 40L).map(i => (i, 2.0))), keepLast(50))
+    }
+    assert(countJobs(sites).isEmpty, sites)
+    assert(ds.meta.files.map(_.rows) == Seq(40L))
+    assert(ds.df.agg(sum("v")).head.getDouble(0) == 20 * 1.0 + 20 * 2.0)
+  }
+
+  test("dedup count still runs when the bound is n+1 and sizes one file") {
+    val ds = new OrderedDataset(spark, tmpDir("boundn1"))
+    ds.write(tsDf((0L until 30L).map(i => (i, 1.0))), keepLast(50))
+    // bound 30 + 21 = 51 > n, but dedup leaves 41 rows: one file, not
+    // the two the pre-dedup bound would size
+    val sites = jobSites {
+      ds.write(tsDf((20L until 41L).map(i => (i, 2.0))), keepLast(50))
+    }
+    assert(countJobs(sites).nonEmpty, sites)
+    assert(ds.meta.files.map(_.rows) == Seq(41L))
+  }
+
+  test("a TimePeriod keep-last upsert runs no dedup count") {
+    val t0 = java.time.LocalDateTime.of(2024, 4, 1, 0, 0)
+    val ds = new OrderedDataset(spark, tmpDir("periodcount"))
+    val opts = WriteOpts("t", TimePeriod("day"),
+      duplicatesOn = Some(Seq("t")))
+    def batch(hours: Seq[Long], v: Double) =
+      hours.map(h => (t0.plusHours(h), v)).toDF("t", "v")
+    ds.write(batch(0L until 48L, 1.0), opts)
+    val sites = jobSites { ds.write(batch(12L until 36L, 2.0), opts) }
+    assert(countJobs(sites).isEmpty, sites)
+    assert(ds.meta.files.size == 2)
+    assert(ds.df.agg(sum("v")).head.getDouble(0) == 24 * 1.0 + 24 * 2.0)
+  }
+
   test("kv metadata add/update/remove") {
     val dir = tmpDir("opd")
     val ds = new OrderedDataset(spark, s"$dir/d1")

@@ -382,5 +382,39 @@ class AggStreamSpec extends SparkSpec {
       .agg(sum("v")).head.getDouble(0)
     assert(math.abs(high - expHigh) < 1e-6)
     assert(all > high)
+
+    // a filter that drops a whole chunk: the time key and the count key
+    // write no data rows for it, yet persist the same restart and pre
+    // state as the key that saw rows
+    val st2 = new Store(spark, tmpDir("fanoutempty"), idx)
+    val early = col("rid") < 100
+    val stream2 = new AggStream(st2, "t", "rid",
+      Map("all" -> StreamKeyCfg(None, "10 minutes", aggs = specs),
+          "time" -> StreamKeyCfg(Some(early), "10 minutes", aggs = specs),
+          "rows" -> StreamKeyCfg(Some(early), "", aggs = specs,
+            xRows = Some(30))),
+      NRows(1000))
+    val rows = tsSeed.collect()
+    def chunk(a: Int, b: Int) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.slice(a, b).toSeq, 2),
+      tsSeed.schema)
+    val countingPre: AggStream.StatefulPre = { (df, state) =>
+      (df, Some((state.map(_.toLong).getOrElse(0L) + 1).toString))
+    }
+    stream2.agg(Iterator(chunk(0, 100)), discardLast = false,
+      statefulPre = Some(countingPre))
+    val filesAfterFirst =
+      Seq("time", "rows").map(k => k -> st2.get(k).meta.files).toMap
+    stream2.agg(Iterator(chunk(100, 200)), discardLast = false,
+      statefulPre = Some(countingPre))
+    val kvAll = st2.get("all").kv
+    assert(kvAll(AggStream.PreKey) == "2")
+    for (k <- Seq("time", "rows")) {
+      val ds = st2.get(k)
+      assert(ds.meta.files == filesAfterFirst(k), k)
+      assert(ds.kv(AggStream.StateKey) == kvAll(AggStream.StateKey), k)
+      assert(ds.kv(AggStream.PreKey) == "2", k)
+    }
+    assert(st2.get("rows").kv(AggStream.RowsKey) == "100")
   }
 }
