@@ -1,15 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cpus
+    val spark = LocalSession()
     // SPARK_GRAFT_SKIP_PREPARE: skip the store-fixture build when
     // benchmarking only pipeline queries (they ensure their own state)
     if (!sys.env.contains("SPARK_GRAFT_SKIP_PREPARE"))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.store._
 
 /** Scratch experiment main (not part of the driver contract): prove
@@ -20,42 +19,46 @@ import graft.store._
 object DeleteBench {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val base = s"/tmp/graft_deletebench_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
     LocalFs.rmTree(new java.io.File(base))
-    val ds = new OrderedDataset(spark, base)
-    val e = Tables.events(spark, d)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    val n = e.count()
+    try {
+      val ds = new OrderedDataset(spark, base)
+      val e = Tables.events(spark, d)
+        .select("event_id", "ts", "user_id", "event_type", "value")
+      val n = e.count()
 
-    def timed[T](label: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"""{"step":"$label","sec":${(System.nanoTime() - t0) / 1e9}%.3f}""")
-      r
+      def timed[T](label: String)(body: => T): T = {
+        val t0 = System.nanoTime()
+        val r = body
+        // Locale.ROOT: the f-interpolator follows the JVM default
+        // locale, and a comma-decimal locale would render invalid JSON
+        val sec = String.format(java.util.Locale.ROOT, "%.3f",
+          Double.box((System.nanoTime() - t0) / 1e9))
+        println(s"""{"step":"$label","sec":$sec}""")
+        r
+      }
+      timed(s"write_${n}_rows") {
+        ds.write(e, WriteOpts("ts", NRows(20000)))
+      }
+      def micros(day: Int) = java.time.LocalDateTime.of(2024, 1, day, 0, 0)
+        .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
+      val lo = OrdTs(micros(10)); val hi = OrdTs(micros(20))
+      val files0 = ds.meta.files.size
+      val rep = timed("delete_10day_fixed_window") {
+        ds.delete(Some(lo), Some(hi))
+      }
+      println(s"""{"filesBefore":$files0,"report":"$rep"}""")
+      // churn-free repeat: zero files touched, near-zero cost — the
+      // O(churn) claim's other endpoint
+      timed("delete_10day_noop_repeat") {
+        ds.delete(Some(lo), Some(hi))
+      }
+      println(s"""{"rows_after":${ds.df.count()},"files_after":${
+        ds.meta.files.size}}""")
+    } finally {
+      LocalFs.rmTree(new java.io.File(base))
+      spark.stop()
     }
-    timed(s"write_${n}_rows") {
-      ds.write(e, WriteOpts("ts", NRows(20000)))
-    }
-    def micros(day: Int) = java.time.LocalDateTime.of(2024, 1, day, 0, 0)
-      .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
-    val lo = OrdTs(micros(10)); val hi = OrdTs(micros(20))
-    val files0 = ds.meta.files.size
-    val rep = timed("delete_10day_fixed_window") {
-      ds.delete(Some(lo), Some(hi))
-    }
-    println(s"""{"filesBefore":$files0,"report":"$rep"}""")
-    // churn-free repeat: zero files touched, near-zero cost — the
-    // O(churn) claim's other endpoint
-    timed("delete_10day_noop_repeat") {
-      ds.delete(Some(lo), Some(hi))
-    }
-    println(s"""{"rows_after":${ds.df.count()},"files_after":${
-      ds.meta.files.size}}""")
-    spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump formatted physical plans for plan-quality review (pushdown,
   * broadcast, codegen spans). Not part of the driver contract.
   */
@@ -17,9 +15,7 @@ object Explain {
       "p_contam_fraction", "p_corpus_stats", "m9_time_travel",
       "p_segment_dedup", "p_text_perplexity", "p_kmeans_step",
       "p_data_mix")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_EXPLAIN_EXEC=1: execute first, then print the FINAL
     // adaptive plan — AQE-only effects (shuffle-stage reuse, runtime

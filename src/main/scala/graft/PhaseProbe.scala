@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch profiling main (not part of the driver contract): splits a
   * query's wall time into DataFrame construction + planning (analysis,
   * optimization, physical planning — driver-side, single-threaded) vs
@@ -12,22 +10,18 @@ import org.apache.spark.sql.SparkSession
 object PhaseProbe {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_CONF="k=v;k=v" — plan experiments (same as Probe)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(
-      _.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
+    // SPARK_GRAFT_CONF="k=v;k=v" — plan experiments (e.g. force the
+    // shuffle-join regime with spark.sql.autoBroadcastJoinThreshold=-1)
+    val conf = sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";").map(_.trim).filter(_.nonEmpty)).map { kv =>
         kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k, v): Unit
+          case Array(k, v) => k -> v
           case _ => throw new IllegalArgumentException(
             s"SPARK_GRAFT_CONF segment '$kv' is not k=v")
         }
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      }
+    val spark = LocalSession(conf: _*)
     try SparkEntry.prepare(spark, d)
     catch { case e: Throwable =>
       System.err.println(s"[phase] prepare failed: ${e.getMessage}") }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,14 +11,7 @@ object Verify {
         !outDir.startsWith("/root/reference"),
       s"outDir '$outDir' points into a read-only input tree " +
         "(args are sfDir THEN outDir; outDir is wiped before writing)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("spark.sql.session.timeZone" -> "UTC")
     // SPARK_GRAFT_QUERIES: comma-separated allowlist for local
     // iteration (same contract as Bench). The driver never sets it.
     val only = sys.env.get("SPARK_GRAFT_QUERIES")

@@ -17,7 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * previously built from nPlanes separate `when(dot(vec, p) >= 0, ...)`
   * columns.
   *
-  * WHY an expression and not the composition (measured, BandBench r8):
+  * WHY an expression and not the composition (measured r8 by a
+  * since-retired bench, SCALE.md "Retired experiment mains"):
   * the composed form UNROLLS one fused dot-product loop per plane into
   * the whole-stage-codegen method, whose bytecode grows past the JIT's
   * per-method compilation ceiling somewhere between 24 and 48 planes —

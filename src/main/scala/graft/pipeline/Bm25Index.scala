@@ -132,32 +132,6 @@ object Bm25Index {
       DedupIndex.compactIndexIfNeeded(spark, dir, ms): Unit)
   }
 
-  /** The r11 in-place add — an ordered upsert straight into the base
-    * run. KEPT ONLY as the measured baseline arm of the add-cost A/B
-    * ([[graft.AddBench]]): on uniformly-hashed keys it rewrites
-    * essentially the whole index per increment. Production callers use
-    * [[add]].
-    */
-  private[graft] def addInPlace(spark: SparkSession, dir: String,
-      batch: DataFrame, idCol: String, textCol: String,
-      rowsPerFile: Long = 1000000L): Unit = {
-    val ds = new OrderedDataset(spark, dir)
-    DedupIndex.requireCfg(ds, Kind, None)
-    require(ds.kv.contains(NDocsKey) && ds.kv.contains(SumDlKey),
-      scalarRemedy(dir))
-    val tf = RetrievalOps.termFreqs(batch, idCol, textCol).persist()
-    try {
-      val (n, s) = scalars(tf)
-      ds.writeOptimistic(postingRows(tf),
-        WriteOpts("hkey", NRows(rowsPerFile),
-          duplicatesOn = Some(Seq("term", "id")))): Unit
-      ds.transformKv { kv =>
-        kv + (NDocsKey -> (kv(NDocsKey).toLong + n).toString) +
-          (SumDlKey -> (kv(SumDlKey).toLong + s).toString)
-      }
-    } finally tf.unpersist(): Unit
-  }
-
   /** Take documents DOWN from the index (the corpus-purge twin of
     * [[add]], dispatched by [[DedupIndex.removeDocs]]): register an id
     * tombstone ([[IndexSegments.removeIds]] — probes stop returning

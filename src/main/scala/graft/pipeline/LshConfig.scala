@@ -12,9 +12,9 @@ package graft.pipeline
   * Every 2 extra band bits cut that floor 4×, so the key width is a
   * function of corpus size, not a constant. [[forCorpusSize]] is that
   * function as code: it sizes band bits so the EXPECTED uniform bucket
-  * holds ~`targetBucketRows` rows, clamped so small corpora keep the
-  * historical 24×6 shape (oracle parity at every driver scale factor
-  * is pinned by LshConfigSpec).
+  * holds ~[[LshConfig.TargetBucketRows]] rows, clamped so small
+  * corpora keep the historical 24×6 shape (oracle parity at every
+  * driver scale factor is pinned by LshConfigSpec).
   *
   * Recall trade-off (standard LSH): wider bands lower the chance two
   * vectors at the cosine threshold share a band, while exact
@@ -82,19 +82,21 @@ object LshConfig {
     * ([[SimilarityOps.estimatedTopBucket]]): the probe bands at most
     * this many sampled vectors regardless of corpus size, so its cost
     * is a small constant fraction of the query's own banding pass
-    * (measured ≤ ~2% of SkewBench's query time at this budget). At
-    * the decision boundary the estimate needs only ~10% relative
-    * accuracy — a bucket at the 4-chunk cutover samples hundreds of
-    * rows even at a 2.5% rate — so a small budget loses nothing.
+    * (measured ≤ ~2% of the template-skew bench's query time at this
+    * budget, SCALE.md "Retired experiment mains"). At the decision
+    * boundary the estimate needs only ~10% relative accuracy — a
+    * bucket at the 4-chunk cutover samples hundreds of rows even at a
+    * 2.5% rate — so a small budget loses nothing.
     */
   val ShapeProbeRows = 50000L
 
   /** Window-vs-fast cutover for the AUTO shape probe: the window
     * shape is chosen when the estimated hottest bucket exceeds this
     * many chunks. At 1 chunk the fast path never even in-task-chunks;
-    * the measured crossover sits well past that (SkewBench: the
-    * window shape wins clearly at a 16-chunk hot bucket, r8's 1.38×
-    * at ~34 chunks), and 4 chunks is conservatively inside the
+    * the measured crossover sits well past that (template-skew bench,
+    * SCALE.md "Retired experiment mains": the window shape wins
+    * clearly at a 16-chunk hot bucket, r8's 1.38× at ~34 chunks), and
+    * 4 chunks is conservatively inside the
     * window-wins region while far above sampling noise.
     */
   val SkewCutoverChunks = 4.0
@@ -113,24 +115,21 @@ object LshConfig {
   val FastPathHeadroom = 8.0
 
   /** Size the band width for an n-vector corpus:
-    * `bits = clamp(ceil(log2(n / targetBucketRows)), minBits, maxBits)`,
+    * `bits = clamp(ceil(log2(n / TargetBucketRows)), minBits, maxBits)`,
     * `nPlanes = nBands · bits`. Driver scale factors (500 / 2k / 20k
     * vectors) all resolve to the historical 24×6; the 200k corpus that
     * killed the fixed config resolves to 36×9 (512 buckets/band).
     */
   def forCorpusSize(n: Long, nBands: Int = DefaultBands,
-      targetBucketRows: Long = TargetBucketRows,
       minBits: Int = MinBits, maxBits: Int = MaxBits): LshConfig = {
     require(n >= 0, s"corpus size must be >= 0, got $n")
-    require(targetBucketRows > 0,
-      s"targetBucketRows must be positive, got $targetBucketRows")
     require(nBands > 0, s"nBands must be positive, got $nBands")
     require(minBits > 0 && maxBits >= minBits,
       s"need 0 < minBits <= maxBits, got $minBits..$maxBits")
     val raw =
-      if (n <= targetBucketRows) minBits
+      if (n <= TargetBucketRows) minBits
       else math.ceil(
-        math.log(n.toDouble / targetBucketRows) / math.log(2.0)).toInt
+        math.log(n.toDouble / TargetBucketRows) / math.log(2.0)).toInt
     val bits = math.min(maxBits, math.max(minBits, raw))
     LshConfig(nBands * bits, bits)
   }

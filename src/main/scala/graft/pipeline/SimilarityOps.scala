@@ -592,8 +592,9 @@ object SimilarityOps {
     * single, triple 1.36× dual (SCALE.md r10); a HEALTHY
     * (non-chunking) corpus pays nothing measurable for any K
     * (in-session min-of-3 A/B: 5.9/6.2/5.7 s single/dual/triple,
-    * identical pair sets — InCapABBench). Properly sized corpora
-    * never enter this regime (buckets stay under chunkSize); callers
+    * identical pair sets — SCALE.md "Retired experiment mains").
+    * Properly sized corpora never enter this regime (buckets stay
+    * under chunkSize); callers
     * running over-cap occupancy at the MaxBits ceiling choose their
     * residual miss rate: the default dual's 0.207, or 0.076 with
     * `chunkRankings = 3` at +36% in-regime wall.
@@ -720,7 +721,7 @@ object SimilarityOps {
     // bucket per band far past expectation, and there the window
     // shape's many chunk-tasks beat the fast path's
     // one-task-per-hot-bucket (measured 1.38× on a 17%-template
-    // corpus, SCALE.md r8d; graft.SkewBench reproduces). Passing it
+    // corpus, SCALE.md r8d and "Retired experiment mains"). Passing it
     // keeps the saturation gate armed via corpusCount. Since r9 the
     // DEFAULT discovers the same skew from the data (the sampled
     // probe below), so the knob is an override for callers who know —
@@ -736,12 +737,13 @@ object SimilarityOps {
     // past SkewCutoverChunks × chunkSize flips to the window shape —
     // its one-task-per-chunk layout beats the fast path's
     // one-task-per-hot-bucket exactly there (measured: window 4.5 s
-    // vs fast 7.8 s on the SkewBench template corpus; probe ≪ 5% of
-    // query time). The probe is ONE small Spark action, run only on
-    // this gate-fast branch — `autoShapeProbe = false` restores the
-    // action-free construction (and is how a caller FORCES the fast
-    // shape, e.g. for parity testing); `assumeTemplateSkew = true`
-    // remains the probe-free window override.
+    // vs fast 7.8 s on the template-skew corpus, SCALE.md "Retired
+    // experiment mains"; probe ≪ 5% of query time). The probe is ONE
+    // small Spark action, run only on this gate-fast branch —
+    // `autoShapeProbe = false` restores the action-free construction
+    // (and is how a caller FORCES the fast shape, e.g. for parity
+    // testing); `assumeTemplateSkew = true` remains the probe-free
+    // window override.
     // exactness shortcut, not a heuristic: a bucket cannot hold more
     // rows than the corpus, so when corpusCount itself sits under the
     // cutover NO probe outcome could flip the decision — skip the
