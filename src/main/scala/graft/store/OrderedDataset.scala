@@ -810,6 +810,20 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
   def write(batch: DataFrame, opts: WriteOpts): UpsertReport =
     withWriteLock { writeBody(batch, opts) }
 
+  /** [[write]] that COMBINES duplicates instead of keeping the last:
+    * the rewrite slice's stored rows and the batch's rows sharing a
+    * `duplicatesOn` key reduce to one row through `combine`, aggregates
+    * naming every non-key column (AggStream's mergeable partials). The
+    * overlap files are read once, by the write itself. An empty batch
+    * commits `opts.kv` alone, creating the dataset if it is missing.
+    */
+  private[graft] def writeCombining(batch: DataFrame, opts: WriteOpts,
+      combine: Seq[Column]): UpsertReport = {
+    require(opts.duplicatesOn.exists(_.nonEmpty),
+      "a combining write needs explicit duplicatesOn key columns")
+    withWriteLock { writeBody(batch, opts, combine = combine) }
+  }
+
   /** [[write]] with a caller validation run INSIDE the write lock,
     * against the then-current sidecar state, before any work: the
     * TOCTOU fence for callers that validated a precondition OUTSIDE
@@ -1023,7 +1037,8 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     * validates the generation `m0` was read at is still current.
     */
   private def writeBody(batch: DataFrame, opts: WriteOpts,
-      optimistic: Boolean = false): UpsertReport = {
+      optimistic: Boolean = false,
+      combine: Seq[Column] = Nil): UpsertReport = {
     val m0: Option[DatasetMeta] = if (exists) Some(meta) else None
     m0.foreach { m =>
       require(m.orderedOn == opts.orderedOn,
@@ -1180,18 +1195,29 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
           val subset =
             if (subset0.isEmpty) dataCols.toSeq
             else (subset0 :+ opts.orderedOn).distinct
-          val w = Window.partitionBy(subset.map(col): _*)
-            .orderBy(col(SeqCol).desc, col(RidCol).desc)
-          unioned.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn")
+          if (combine.nonEmpty) {
+            // provenance carries through as max seq / min rid, the
+            // order materialize lays ties out in
+            val aggs = combine ++
+              Seq(max(SeqCol).as(SeqCol), min(RidCol).as(RidCol))
+            unioned.groupBy(subset.map(col): _*)
+              .agg(aggs.head, aggs.tail: _*)
+              .select((dataCols.toSeq :+ SeqCol :+ RidCol).map(col): _*)
+          } else {
+            val w = Window.partitionBy(subset.map(col): _*)
+              .orderBy(col(SeqCol).desc, col(RidCol).desc)
+            unioned.withColumn("__rn", row_number().over(w))
+              .filter(col("__rn") === 1).drop("__rn")
+          }
       }
 
       // size files from the POST-dedup count when deduping: heavy-
-      // duplicate upserts (every AggStream merge write supersedes most
-      // of the slice it rewrites) would otherwise land every file near
-      // half target — permanently off-target with nothing to coalesce
-      // them. The count re-runs the dedup lineage over the merge slice
-      // ∪ batch, so it runs only when it can change the file count:
+      // duplicate upserts (every AggStream combining write folds most
+      // of its batch into the slice it rewrites) would otherwise land
+      // every file near half target — permanently off-target with
+      // nothing to coalesce them. The count re-runs the dedup lineage
+      // over the merge slice ∪ batch, so it runs only when it can
+      // change the file count:
       // never for a TimePeriod target (materialize sizes by period, not
       // by rows), and not when even the pre-dedup bound fits one file.
       val rowsBound = rewrite.map(_.rows).sum + batchRows

@@ -1,6 +1,7 @@
 package graft.stream
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import graft.agg.{AggFn, AggSpec, SegmentAgg}
 import graft.store._
@@ -53,16 +54,20 @@ final case class StreamKeyCfg(
   * partial aggregates* per bin — for first/last/min/max/sum the stored
   * row IS the restart state, extended with the bin's tiebreak bounds
   * (`__tb_min`/`__tb_max`) so first/last merge correctly across chunks.
-  * Each seed chunk is aggregated to per-bin partials and combined with
-  * the previously stored partial of any still-open bin, then upserted
-  * keep-last on the bin label (ref A8 restart-aware stitching,
-  * cumsegagg.py:398-435). The restart index persists in the sidecar kv
-  * atomically with the data write (ref aggstream.py:799-806).
+  * Each seed chunk is aggregated to per-bin partials and written with
+  * a combining upsert on the bin key ([[OrderedDataset.writeCombining]]):
+  * the stored partials of the still-open bins are combined with the
+  * chunk's inside the upsert's single read of the files the chunk
+  * overlaps (ref A8 restart-aware stitching, cumsegagg.py:398-435). The
+  * restart index persists in the sidecar kv atomically with the data
+  * write (ref aggstream.py:799-806).
   *
   * Scale notes: every step is a distributed DataFrame op — partial agg
-  * shuffles once by bin; the combine touches only bins ≥ the restart
-  * index via a zone-map-pruned read; nothing is collected to the driver
-  * but per-chunk min/max stats.
+  * shuffles once by bin; the combine reads only the zone-map-selected
+  * files the chunk's bins overlap, once, in the same job that rewrites
+  * them; nothing is collected to the driver but the chunk's min/max
+  * stats and the write's batch stats (plus a row count per count-binned
+  * key, whose processed-row kv commits with the data).
   */
 final class AggStream[K](
     val store: Store[K],
@@ -99,8 +104,9 @@ final class AggStream[K](
     else ds.kv.get(StateKey).map(Restart.fromJson)
   }
 
-  /** Process one seed chunk for one key: partial-agg, merge with stored
-    * open-bin partials, upsert keep-last on bin.
+  /** Process one seed chunk for one key: partial-agg, then a combining
+    * upsert on the bin key that folds the partials into the stored
+    * open-bin partials inside the write's single overlap read.
     */
   private def processKey(k: K, cfg: StreamKeyCfg, chunk: DataFrame,
       restart: Restart, extraKv: Map[String, String]): Unit = {
@@ -127,40 +133,19 @@ final class AggStream[K](
     val groupCols = col("bin_id").as(BinCol) +: cfg.snapFreq.toSeq.map(f =>
       SegmentAgg.timeBin(col(orderedOn), f, cfg.closed, cfg.label)
         .as(SnapCol))
-    val keyCols = BinCol +: cfg.snapFreq.toSeq.map(_ => SnapCol)
     val exprs = partialExprs(cfg) ++ Seq(
       min(col(orderedOn)).as(LabelCol), sum(lit(1L)).as(NCol))
     val partial = binned.groupBy(groupCols: _*)
-      .agg(exprs.head, exprs.tail: _*).persist()
-    try {
-      // one action: emptiness, the merge-read bound and the row count
-      val stats = partial.agg(min(BinCol), sum(NCol), count(lit(1))).head()
-      if (stats.getLong(2) == 0) {
-        // persist restart AND pre state so this key stays aligned with
-        // the keys that did see rows (a dropped extraKv here would wedge
-        // the next construction's pre-state agreement check)
-        if (ds.exists)
-          ds.updateKv(extraKv ++ Map(StateKey -> restart.toJson))
-        return
-      }
-      val minBin = OrdVal.fromAny(stats.get(0))
-      val chunkRows = stats.getLong(1)
-      val merged =
-        if (!ds.exists) partial
-        else {
-          val old = ds.rangeDF(Some(minBin), None)
-            .select(partial.columns.toSeq.map(col): _*)
-          val ce = combineExprs(cfg) ++ Seq(
-            min(LabelCol).as(LabelCol), sum(NCol).as(NCol))
-          old.unionByName(partial).groupBy(keyCols.map(col): _*)
-            .agg(ce.head, ce.tail: _*)
-        }
-      ds.write(merged, WriteOpts(
-        orderedOn = BinCol, target = target,
-        duplicatesOn = Some(keyCols),
-        kv = extraKv ++ Map(StateKey -> restart.toJson,
-          RowsKey -> (rowsSeen + chunkRows).toString)))
-    } finally partial.unpersist()
+      .agg(exprs.head, exprs.tail: _*)
+    // one action: the rows kv commits atomically with the data
+    val chunkRows = data.count()
+    ds.writeCombining(partial, WriteOpts(
+      orderedOn = BinCol, target = target,
+      duplicatesOn = Some(keyCols(cfg)),
+      kv = extraKv ++ Map(StateKey -> restart.toJson,
+        RowsKey -> (rowsSeen + chunkRows).toString)),
+      combineExprs(cfg) ++ Seq(min(LabelCol).as(LabelCol),
+        sum(NCol).as(NCol)))
   }
 
   private def processKeyTime(k: K, cfg: StreamKeyCfg, data: DataFrame,
@@ -170,38 +155,17 @@ final class AggStream[K](
     val groupCols = bin.as(BinCol) +: cfg.snapFreq.toSeq.map(f =>
       SegmentAgg.timeBin(col(orderedOn), f, cfg.closed, cfg.label)
         .as(SnapCol))
-    val keyCols = BinCol +: cfg.snapFreq.toSeq.map(_ => SnapCol)
     val partial = data.groupBy(groupCols: _*)
       .agg(partialExprs(cfg).head, partialExprs(cfg).tail: _*)
-      .persist()
-    try {
-      // one action: emptiness and the merge-read bound
-      val stats = partial.agg(min(BinCol), count(lit(1))).head()
-      val ds = store.get(k)
-      if (stats.getLong(1) == 0) {
-        // still persist the restart index (and pre state) so all keys
-        // stay aligned
-        if (ds.exists)
-          ds.updateKv(extraKv ++ Map(StateKey -> restart.toJson))
-        return
-      }
-      val minBin = OrdVal.fromAny(stats.get(0))
-      val merged =
-        if (!ds.exists) partial
-        else {
-          val old = ds.rangeDF(Some(minBin), None)
-            .select(partial.columns.toSeq.map(col): _*)
-          old.unionByName(partial)
-            .groupBy(keyCols.map(col): _*)
-            .agg(combineExprs(cfg).head, combineExprs(cfg).tail: _*)
-        }
-      ds.write(merged, WriteOpts(
-        orderedOn = BinCol,
-        target = target,
-        duplicatesOn = Some(keyCols),
-        kv = extraKv ++ Map(StateKey -> restart.toJson)))
-    } finally partial.unpersist()
+    store.get(k).writeCombining(partial, WriteOpts(
+      orderedOn = BinCol, target = target,
+      duplicatesOn = Some(keyCols(cfg)),
+      kv = extraKv ++ Map(StateKey -> restart.toJson)),
+      combineExprs(cfg))
   }
+
+  private def keyCols(cfg: StreamKeyCfg): Seq[String] =
+    BinCol +: cfg.snapFreq.toSeq.map(_ => SnapCol)
 
   /** Run the stream over an iterator of ordered seed chunks
     * (ref aggstream.py:1399-1474: seed as DataFrame or iterable).
@@ -264,74 +228,96 @@ final class AggStream[K](
     }
     def trim(df: DataFrame): DataFrame = trimTo(df, restart)
 
+    // thread-parallel per key (ref joblib fan-out, aggstream.py:83,
+    // 1309-1317): each key's partial-agg + combining upsert touches
+    // only that key's dataset, and Spark's scheduler interleaves
+    // concurrently submitted jobs — serial submission would leave the
+    // cluster idle during each key's driver-side planning. One pooled
+    // thread per key, each running with the caller's Spark local
+    // properties (job group, description, scheduler pool) as of
+    // submission, so cancelling the caller's job group cancels the
+    // chunk's jobs.
+    def fanOut(run: (K, StreamKeyCfg) => Unit): Unit =
+      if (keys.size < 2) keys.foreach { case (k, cfg) => run(k, cfg) }
+      else {
+        val session =
+          store.spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        val futures = keys.toSeq.map { case (k, cfg) =>
+          SQLExecution.withThreadLocalCaptured(session, KeyThreads)(
+            run(k, cfg))
+        }
+        // every key finishes before a failure is rethrown: a caller
+        // restarting at once must not read a sibling's restart state
+        // while that sibling is still committing the chunk
+        futures.flatMap(f => scala.util.Try(f.join()).failed.toOption)
+          .headOption.foreach {
+            case e: java.util.concurrent.CompletionException
+                if e.getCause != null => throw e.getCause
+            case e => throw e
+          }
+      }
+
     // `d0` must already have the pre hook applied.
     def runChunk(d0: DataFrame, isFinal: Boolean): Unit = {
       val data = trim(d0).persist()
-      val st = data.agg(min(orderedOn), max(orderedOn), count(lit(1))).head()
-      if (st.getLong(2) == 0) { data.unpersist(); return }
-      val mx = OrdVal.fromAny(st.get(1))
-      val dt = data.schema(orderedOn).dataType
-      val (process, newRemainder, newRestart) =
-        if (discardLast && !isFinal) {
-          (data.filter(col(orderedOn) < lit(mx.toLiteralFor(dt))),
-           Some(data.filter(col(orderedOn) === lit(mx.toLiteralFor(dt)))),
-           Restart(mx, exclusive = false))
-        } else (data, None, Restart(mx, exclusive = true))
-      val hasRows = !process.isEmpty
-      if (hasRows) {
-        val extraKv = preState.map(PreKey -> _).toMap
-        // per-key trim: a key AHEAD of the global restart (divergence
-        // after a partially-failed fan-out) skips rows it already
-        // folded; for aligned keys this is the global trim repeated —
-        // a no-op predicate
-        def run(k: K, cfg: StreamKeyCfg): Unit =
-          processKey(k, cfg, trimTo(process, restartByKey(k)), newRestart,
-            extraKv)
-        // thread-parallel per key (ref joblib fan-out, aggstream.py:83,
-        // 1309-1317): each key's partial-agg + merge + upsert touches
-        // only that key's dataset, and Spark's scheduler interleaves
-        // concurrently submitted jobs — serial submission would leave
-        // the cluster idle during each key's driver-side planning
-        if (keys.size > 1) {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.duration.Duration
-          Await.result(Future.sequence(keys.toSeq.map { case (k, cfg) =>
-            Future(run(k, cfg))
-          }), Duration.Inf): Unit
-        } else keys.foreach { case (k, cfg) => run(k, cfg) }
-        restart = Some(newRestart)
-        keys.keys.foreach(k => restartByKey(k) = Some(newRestart))
-      }
-      // release the cache backing the previous remainder, now consumed
-      cachedPrev.foreach(_.unpersist())
-      remainder = newRemainder
-      if (newRemainder.isDefined) cachedPrev = Some(data)
-      else { cachedPrev = None; data.unpersist() }
+      var keepCached = false
+      try {
+        val st =
+          data.agg(min(orderedOn), max(orderedOn), count(lit(1))).head()
+        if (st.getLong(2) > 0) {
+          val mn = OrdVal.fromAny(st.get(0))
+          val mx = OrdVal.fromAny(st.get(1))
+          val dt = data.schema(orderedOn).dataType
+          // withholding the max-valued block leaves rows iff min < max
+          val (process, newRemainder, newRestart, hasRows) =
+            if (discardLast && !isFinal) {
+              (data.filter(col(orderedOn) < lit(mx.toLiteralFor(dt))),
+               Some(data.filter(col(orderedOn) === lit(mx.toLiteralFor(dt)))),
+               Restart(mx, exclusive = false), mn < mx)
+            } else (data, None, Restart(mx, exclusive = true), true)
+          if (hasRows) {
+            val extraKv = preState.map(PreKey -> _).toMap
+            // per-key trim: a key AHEAD of the global restart (divergence
+            // after a partially-failed fan-out) skips rows it already
+            // folded; for aligned keys this is the global trim repeated —
+            // a no-op predicate
+            fanOut((k, cfg) => processKey(k, cfg,
+              trimTo(process, restartByKey(k)), newRestart, extraKv))
+            restart = Some(newRestart)
+            keys.keys.foreach(k => restartByKey(k) = Some(newRestart))
+          }
+          // release the cache backing the previous remainder, now consumed
+          cachedPrev.foreach(_.unpersist())
+          remainder = newRemainder
+          keepCached = newRemainder.isDefined
+          cachedPrev = if (keepCached) Some(data) else None
+        }
+      } finally if (!keepCached) data.unpersist(): Unit
     }
 
-    seed.foreach { chunk =>
-      // pre hook applies to fresh seed rows only, never re-applied to the
-      // withheld remainder (ref `pre` contract, aggstream.py:539-546)
-      val preApplied = pre.map(_(chunk)).getOrElse(chunk)
-      val fresh = statefulPre match {
-        case Some(sp) =>
-          val (df, st) = sp(preApplied, preState)
-          preState = st
-          df
-        case None => preApplied
+    try {
+      seed.foreach { chunk =>
+        // pre hook applies to fresh seed rows only, never re-applied to
+        // the withheld remainder (ref `pre` contract, aggstream.py:539-546)
+        val preApplied = pre.map(_(chunk)).getOrElse(chunk)
+        val fresh = statefulPre match {
+          case Some(sp) =>
+            val (df, st) = sp(preApplied, preState)
+            preState = st
+            df
+          case None => preApplied
+        }
+        val d = remainder match {
+          case Some(r) =>
+            r.unionByName(fresh.select(r.columns.toSeq.map(col): _*))
+          case None => fresh
+        }
+        runChunk(d, isFinal = false)
       }
-      val d = remainder match {
-        case Some(r) => r.unionByName(fresh.select(r.columns.toSeq.map(col): _*))
-        case None => fresh
-      }
-      runChunk(d, isFinal = false)
-    }
-    // final flush of the withheld tail (ref final_write, aggstream.py:799-837)
-    remainder.foreach { r => runChunk(r, isFinal = true) }
-    remainder = None
-    cachedPrev.foreach(_.unpersist())
-    cachedPrev = None
+      // final flush of the withheld tail (ref final_write,
+      // aggstream.py:799-837)
+      remainder.foreach { r => runChunk(r, isFinal = true) }
+    } finally cachedPrev.foreach(_.unpersist())
   }
 
   private def aggCasts(cfg: StreamKeyCfg): Seq[Column] =
@@ -486,6 +472,16 @@ object AggStream {
     */
   type StatefulPre =
     (DataFrame, Option[String]) => (DataFrame, Option[String])
+
+  /** Threads of the per-key fan-out: daemon, shared by every stream and
+    * reused across chunks (idle ones exit after a minute), so a chunk
+    * neither starts nor stops threads. Each task runs with its
+    * submitter's local properties (see `agg`), so a reused thread
+    * carries no earlier caller's job group. */
+  private lazy val KeyThreads = java.util.concurrent.Executors
+    .newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, "aggstream-key"); t.setDaemon(true); t
+    }
 
   val BinCol = "bin"
   val SnapCol = "snap"

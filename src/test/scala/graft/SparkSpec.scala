@@ -48,7 +48,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     jobs.toArray(Array.empty[(Option[String], String)]).toSeq.map {
       case (exec, details) => SparkSpec.JobSite(
-        exec.flatMap(id => Option(execSites.get(id))).getOrElse(details))
+        exec.flatMap(id => Option(execSites.get(id))).getOrElse(details),
+        exec)
     }
   }
 }
@@ -57,11 +58,14 @@ object SparkSpec {
   /** A job's call site from its long form: the Spark API frame that
     * started it (`sparkFrame`, e.g. `...Dataset.count`) and the first
     * frame of the caller (`userFrame`, e.g.
-    * `graft.store.OrderedDataset.writeBody(OrderedDataset.scala:1199)`). */
-  final case class JobSite(longForm: String) {
+    * `graft.store.OrderedDataset.writeBody(OrderedDataset.scala:1199)`),
+    * and the SQL execution the job ran for, if any (one execution can
+    * start several jobs). */
+  final case class JobSite(longForm: String,
+      execution: Option[String] = None) {
     private val frames = longForm.split("\n").map(_.trim)
     private val sparkFrame = frames.head.takeWhile(_ != '(')
-    private val userFrame = frames.lift(1).getOrElse("")
+    val userFrame: String = frames.lift(1).getOrElse("")
     /** True when `method` of the Spark API started this job from a call
       * in `file` — line numbers deliberately not compared. */
     def is(method: String, file: String): Boolean =

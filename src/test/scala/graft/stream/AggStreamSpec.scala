@@ -417,4 +417,138 @@ class AggStreamSpec extends SparkSpec {
     }
     assert(st2.get("rows").kv(AggStream.RowsKey) == "100")
   }
+
+  def chunkOf(seed: DataFrame, a: Int, b: Int): DataFrame = {
+    val rows = seed.collect()
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.slice(a, b).toSeq, 2), seed.schema)
+  }
+
+  test("a time key's chunk runs no job of its own: the upsert combines") {
+    val st = new Store(spark, tmpDir("combine-jobs"), idx)
+    def mk() = new AggStream(st, "t", "rid",
+      Map("o" -> StreamKeyCfg(None, "10 minutes", aggs = specs)),
+      NRows(1000))
+    mk().agg(Iterator(chunkOf(tsSeed, 0, 100)), discardLast = false)
+    val second = chunkOf(tsSeed, 100, 200)
+    val sites = jobSites { mk().agg(Iterator(second), discardLast = false) }
+    assert(!sites.exists(_.userFrame.contains("processKeyTime")), sites)
+    assert(!sites.exists(_.is("isEmpty", "AggStream.scala")), sites)
+    // one SQL execution from AggStream itself: runChunk's stats action
+    val own = sites.filter(_.userFrame.contains("(AggStream.scala:"))
+    assert(own.map(_.execution).distinct.size == 1, sites)
+    assert(own.forall(_.userFrame.contains("runChunk")), sites)
+    assert(mk().results("o").orderBy("bin").collect().toSeq ==
+      batchExpected(tsSeed).toSeq)
+  }
+
+  test("open bins spanning several files combine across restarts") {
+    // 240 rows, two per half hour over 60 hours: day bins with hourly
+    // snapshot cells, and 50-row bins with hourly cells; NRows(3) puts
+    // an open bin's cells in several stored files
+    val seed = (0 until 240).map { i =>
+      (java.time.LocalDateTime.of(2024, 1, 1, 0, 0).plusSeconds(i / 2 * 1800L),
+       i * 1.0 + (i % 7), i.toLong)
+    }.toDF("t", "v", "rid").orderBy("t", "rid")
+    val cfgs = Map(
+      "day" -> StreamKeyCfg(None, "1 day", aggs = specs,
+        snapFreq = Some("1 hour")),
+      "rows" -> StreamKeyCfg(None, "", aggs = specs, xRows = Some(50),
+        snapFreq = Some("1 hour")))
+    val expDay = SegmentAgg.snapshots(seed,
+      SegmentAgg.timeBin(col("t"), "1 day"),
+      SegmentAgg.timeBin(col("t"), "1 hour"), specs, col("rid"))
+      .orderBy("bin", "snap").collect().toSeq
+    val expRows = SegmentAgg.xRowsBins(seed, "t", 50, col("rid"))
+      .groupBy(col("bin_id").as("bin"))
+      .agg(min("t").as("bin_label"), count(lit(1)).as("n_rows") +:
+        SegmentAgg.aggExprs(specs, col("rid")): _*)
+      .orderBy("bin").collect().toSeq
+    // even split points: a restart after a chunk's final flush treats
+    // that chunk's last timestamp as complete
+    for (splits <- Seq(Seq(38), Seq(96, 98, 182), Seq(2, 120, 238))) {
+      val st = new Store(spark, tmpDir("combine-open"), idx)
+      val bounds = (0 +: splits :+ 240).distinct.sorted
+      bounds.sliding(2).foreach { case Seq(a, b) =>
+        // a fresh instance per chunk: every chunk restarts from state
+        new AggStream(st, "t", "rid", cfgs, NRows(3))
+          .agg(Iterator(chunkOf(seed, a, b)))
+      }
+      for (k <- cfgs.keys)
+        assert(st.get(k).meta.files.groupBy(_.min).exists(_._2.size >= 2),
+          s"$k: no bin spans two files, splits=$splits")
+      val s = new AggStream(st, "t", "rid", cfgs, NRows(3))
+      assert(s.results("day").orderBy("bin", "snap").collect().toSeq ==
+        expDay, s"splits=$splits")
+      assert(s.binResults("rows").orderBy("bin").collect().toSeq ==
+        expRows, s"splits=$splits")
+    }
+  }
+
+  test("a key filtered empty on the first chunk starts with no files") {
+    val st = new Store(spark, tmpDir("firstempty"), idx)
+    val late = col("rid") >= 100
+    def mk() = new AggStream(st, "t", "rid",
+      Map("all" -> StreamKeyCfg(None, "10 minutes", aggs = specs),
+          "time" -> StreamKeyCfg(Some(late), "10 minutes", aggs = specs),
+          "rows" -> StreamKeyCfg(Some(late), "", aggs = specs,
+            xRows = Some(30))),
+      NRows(1000))
+    val countingPre: AggStream.StatefulPre = { (df, state) =>
+      (df, Some((state.map(_.toLong).getOrElse(0L) + 1).toString))
+    }
+    mk().agg(Iterator(chunkOf(tsSeed, 0, 100)), discardLast = false,
+      statefulPre = Some(countingPre))
+    val kvAll = st.get("all").kv
+    for (k <- Seq("time", "rows")) {
+      val ds = st.get(k)
+      assert(ds.exists && ds.meta.files.isEmpty, k)
+      assert(ds.kv(AggStream.StateKey) == kvAll(AggStream.StateKey), k)
+      assert(ds.kv(AggStream.PreKey) == "1", k)
+    }
+    assert(st.get("rows").kv(AggStream.RowsKey) == "0")
+    mk().agg(Iterator(chunkOf(tsSeed, 100, 200)), discardLast = false,
+      statefulPre = Some(countingPre))
+    assert(mk().results("time").orderBy("bin").collect().toSeq ==
+      batchExpected(tsSeed.filter(late)).toSeq)
+    assert(st.get("rows").kv(AggStream.RowsKey) == "100")
+    assert(mk().results("rows").agg(sum("n_rows")).head.getLong(0) == 100L)
+  }
+
+  test("a failing key: siblings finish and no cache is left behind") {
+    val st = new Store(spark, tmpDir("keyfail"), idx)
+    // the key's filter throws at execution time, from the second chunk
+    val boom = when(col("rid") >= 100, raise_error(lit("key boom")))
+      .otherwise(lit(true))
+    def mk() = new AggStream(st, "t", "rid",
+      Map("good" -> StreamKeyCfg(None, "10 minutes", aggs = specs),
+          "bad" -> StreamKeyCfg(Some(boom), "10 minutes", aggs = specs)),
+      NRows(1000))
+    mk().agg(Iterator(chunkOf(tsSeed, 0, 100)))
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    val e = intercept[Exception] {
+      mk().agg(Iterator(chunkOf(tsSeed, 100, 200)))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("key boom")), e)
+    val gen = st.get("good").generation
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore)
+    Thread.sleep(2000)
+    assert(st.get("good").generation == gen)
+  }
+
+  test("each chunk's key writes run in the caller's job group") {
+    val st = new Store(spark, tmpDir("jobgroup"), idx)
+    val cfg = StreamKeyCfg(None, "10 minutes", aggs = specs)
+    def mk() = new AggStream(st, "t", "rid",
+      Map("a" -> cfg, "b" -> cfg, "c" -> cfg), NRows(1000))
+    for ((a, b) <- Seq((0, 100), (100, 200))) {
+      val chunk = chunkOf(tsSeed, a, b)
+      val sites = jobSites { mk().agg(Iterator(chunk), discardLast = false) }
+      val writes = sites.filter(s => s.is("parquet", "OrderedDataset.scala")
+        && s.userFrame.contains("materialize"))
+      assert(writes.map(_.execution).distinct.size == 3,
+        s"chunk $a-$b: $sites")
+    }
+  }
 }
