@@ -20,20 +20,10 @@ object SaltedAgg {
   private val TbMax = "__tb_max"
 
   def aggregate(df: DataFrame, key: Column, specs: Seq[AggSpec],
-      tie: Column, saltBuckets: Int,
-      exactDoubleSums: Boolean = true): DataFrame = {
+      tie: Column, saltBuckets: Int): DataFrame = {
     val salt = pmod(hash(tie), lit(saltBuckets))
-    val partialExprs = specs.map { s =>
-      val c = col(s.in)
-      (s.fn match {
-        case AggFn.First => min_by(c, tie)
-        case AggFn.Last  => max_by(c, tie)
-        case AggFn.Min   => min(c)
-        case AggFn.Max   => max(c)
-        case AggFn.Sum   =>
-          if (exactDoubleSums) sum(c.cast("decimal(38,6)")) else sum(c)
-      }).as(s.out)
-    } ++ Seq(min(tie).as(TbMin), max(tie).as(TbMax))
+    val partialExprs = SegmentAgg.partialAggExprs(specs, tie) ++
+      Seq(min(tie).as(TbMin), max(tie).as(TbMax))
     val partial = df.groupBy(key.as("bin"), salt.as("__salt"))
       .agg(partialExprs.head, partialExprs.tail: _*)
     val combineExprs = specs.map { s =>
@@ -43,8 +33,7 @@ object SaltedAgg {
         case AggFn.Last  => max_by(c, col(TbMax))
         case AggFn.Min   => min(c)
         case AggFn.Max   => max(c)
-        case AggFn.Sum   =>
-          if (exactDoubleSums) sum(c).cast("double") else sum(c)
+        case AggFn.Sum   => sum(c).cast("double")
       }).as(s.out)
     }
     partial.groupBy("bin").agg(combineExprs.head, combineExprs.tail: _*)

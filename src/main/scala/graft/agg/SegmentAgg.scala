@@ -25,18 +25,6 @@ object AggFn {
   * (ref cumsegagg.py:47-155). */
 final case class AggSpec(out: String, in: String, fn: AggFn)
 
-/** Segmentation (binning) + segment aggregation on DataFrames — the
-  * Spark-native port of the reference's segmentby/cumsegagg layer
-  * (ref segmentby.py, cumsegagg.py). Bins are expressed as *columns*
-  * (codegen'd, shuffle-by-bin) rather than index arrays; first/last are
-  * made deterministic with an explicit tiebreak column because Spark
-  * aggregation order is not defined (SURVEY §7.5 risk 2).
-  *
-  * Double sums are accumulated in DECIMAL(38,6): exact and associative,
-  * so results are identical under any shuffle/partition order — the
-  * distributed analog of the reference's single-threaded deterministic
-  * sums — and cast back to double on output.
-  */
 /** User-extensible segmentation contract — the port of the reference's
   * `bin_by` Callable (ref segmentby.py:735-800): a BinBy maps the
   * ordered column to a bin-label column. The reference's built-in
@@ -68,6 +56,18 @@ object BinBy {
   }
 }
 
+/** Segmentation (binning) + segment aggregation on DataFrames — the
+  * Spark-native port of the reference's segmentby/cumsegagg layer
+  * (ref segmentby.py, cumsegagg.py). Bins are expressed as *columns*
+  * (codegen'd, shuffle-by-bin) rather than index arrays; first/last are
+  * made deterministic with an explicit tiebreak column because Spark
+  * aggregation order is not defined (SURVEY §7.5 risk 2).
+  *
+  * Double sums are accumulated in DECIMAL(38,6): exact and associative,
+  * so results are identical under any shuffle/partition order — the
+  * distributed analog of the reference's single-threaded deterministic
+  * sums — and cast back to double on output.
+  */
 object SegmentAgg {
 
   /** Tumbling time-bin label (ref segmentby.py:141-368 by_scale with a
@@ -171,8 +171,7 @@ object SegmentAgg {
 
   /** Aggregation expressions for one bin; `tie` orders rows within a bin
     * (the ordered_on + provenance tiebreak). */
-  def aggExprs(specs: Seq[AggSpec], tie: Column,
-      exactDoubleSums: Boolean = true): Seq[Column] =
+  def aggExprs(specs: Seq[AggSpec], tie: Column): Seq[Column] =
     specs.map { s =>
       val c = col(s.in)
       (s.fn match {
@@ -180,9 +179,7 @@ object SegmentAgg {
         case AggFn.Last  => max_by(c, tie)
         case AggFn.Min   => min(c)
         case AggFn.Max   => max(c)
-        case AggFn.Sum   =>
-          if (exactDoubleSums) sum(c.cast("decimal(38,6)")).cast("double")
-          else sum(c)
+        case AggFn.Sum   => sum(c.cast("decimal(38,6)")).cast("double")
       }).as(s.out)
     }
 

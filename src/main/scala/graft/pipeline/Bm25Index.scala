@@ -208,7 +208,7 @@ object Bm25Index {
     */
   def topK(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
       k1: Double = RetrievalOps.K1, b: Double = RetrievalOps.B,
-      maxDriverKeys: Int = 65536): DataFrame =
+      maxDriverKeys: Int = DedupIndex.MaxDriverKeys): DataFrame =
     topK(DedupIndex.partsFor(spark, dir, Kind, None), queries, k, k1, b,
       maxDriverKeys)
 

@@ -161,7 +161,7 @@ object ContaminationOps {
     * away. New benchmarks arrive → call build again with just them.
     */
   def buildIndex(spark: SparkSession, dir: String, eval: DataFrame,
-      idCol: String, textCol: String, n: Int, fpp: Double = 0.001,
+      idCol: String, textCol: String, n: Int,
       rowsPerFile: Long = 4000000L,
       maxSegments: Option[Int] = None): Unit = {
     val grams = DedupOps.shingleTable(eval, idCol, textCol, n)
@@ -177,7 +177,7 @@ object ContaminationOps {
       WriteOpts("hkey", NRows(rowsPerFile), duplicatesOn = Some(Seq("g")),
         kv = Map("graft.index.kind" -> "contamination",
           "graft.index.cfg" -> s"n=$n"))): Unit
-    writeBloom(spark, target, fpp)
+    writeBloom(spark, target)
     maxSegments.foreach(ms =>
       DedupIndex.compactIndexIfNeeded(spark, dir, ms): Unit)
   }
@@ -189,12 +189,11 @@ object ContaminationOps {
     * part's bloom (correct, just slower) — a bloom missing index grams
     * would cause silent FALSE NEGATIVES, the one failure mode a
     * prefilter must never have. */
-  private def writeBloom(spark: SparkSession, ds: OrderedDataset,
-      fpp: Double): Unit = {
+  private def writeBloom(spark: SparkSession, ds: OrderedDataset): Unit = {
     val builtOverRows = ds.meta.totalRows
     val bytes = graft.functions.BloomFns.serialize(
       graft.functions.BloomFns.build(ds.df, col("g"),
-        math.max(builtOverRows, 1L), fpp))
+        math.max(builtOverRows, 1L), IndexBloomFpp))
     publishBloom(spark, ds, bytes, builtOverRows)
   }
 
@@ -219,9 +218,8 @@ object ContaminationOps {
   /** Re-derive the BASE `_bloom` after a compaction folded segments
     * into it ([[DedupIndex.compactIndex]] calls this for the
     * contamination kind): one scan of the folded base. */
-  private[pipeline] def rebuildBloom(spark: SparkSession, dir: String,
-      fpp: Double = 0.001): Unit =
-    writeBloom(spark, new OrderedDataset(spark, dir), fpp)
+  private[pipeline] def rebuildBloom(spark: SparkSession, dir: String): Unit =
+    writeBloom(spark, new OrderedDataset(spark, dir))
 
   /** Targeted per-part bloom repair (ADVICE r12): rebuild the `_bloom`
     * of every union member whose blob is missing or stale (generation
@@ -230,8 +228,7 @@ object ContaminationOps {
     * probe prefilter for the WHOLE index until a full compaction).
     * Each repaired part scans only ITS OWN grams — O(part), not
     * O(index). Returns #parts repaired. */
-  def repairBlooms(spark: SparkSession, dir: String,
-      fpp: Double = 0.001): Int = {
+  def repairBlooms(spark: SparkSession, dir: String): Int = {
     val parts = DedupIndex.partsFor(spark, dir, "contamination", None)
     val fs = new HPath(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -240,15 +237,15 @@ object ContaminationOps {
         p.m.kv.get(BloomGenKey).contains(p.m.totalRows.toString) &&
           fs.exists(new HPath(s"${p.ds.dir}/_bloom"))
       if (current) false
-      else { writeBloom(spark, p.ds, fpp); true }
+      else { writeBloom(spark, p.ds); true }
     }
   }
 
   private val BloomGenKey = "graft.contam.bloomrows"
 
-  /** fpp of a probe-time auto-repaired bloom — [[buildIndex]]'s
-    * default; the original fpp is not recoverable from the blob. */
-  private val AutoRepairFpp = 0.001
+  /** fpp of every persisted index bloom: built, rebuilt after a fold,
+    * repaired, or auto-repaired in a probe. */
+  private val IndexBloomFpp = 0.001
 
   /** Probe the persisted index: `(id, n_shared)` for every batch doc
     * sharing ≥ 1 distinct n-gram with the indexed eval grams —
@@ -264,7 +261,8 @@ object ContaminationOps {
     * route, never decide.
     */
   def probeIndex(spark: SparkSession, dir: String, batch: DataFrame,
-      idCol: String, textCol: String, n: Int, maxDriverKeys: Int = 65536,
+      idCol: String, textCol: String, n: Int,
+      maxDriverKeys: Int = DedupIndex.MaxDriverKeys,
       autoRepair: Boolean = false): DataFrame =
     probeIndex(spark, DedupIndex.partsFor(spark, dir, "contamination",
       Some(s"n=$n")), batch, idCol, textCol, n, maxDriverKeys,
@@ -323,7 +321,7 @@ object ContaminationOps {
               "one O(part) scan)")
           val bytes = graft.functions.BloomFns.serialize(
             graft.functions.BloomFns.build(p.ds.dfOf(p.m), col("g"),
-              math.max(p.m.totalRows, 1L), AutoRepairFpp))
+              math.max(p.m.totalRows, 1L), IndexBloomFpp))
           // publish only when the part hasn't moved since the capture
           // (a bloom stamped for another generation would be ignored
           // by its gen check anyway — skip the useless write)

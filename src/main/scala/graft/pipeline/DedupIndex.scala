@@ -45,6 +45,11 @@ import graft.store.{NRows, OrdLong, OrderedDataset, WriteOpts}
   */
 object DedupIndex {
 
+  /** Probe-key count up to which a probe collects its keys and reads
+    * only the index files covering them; above it, the probe is a slim
+    * equi-join against the whole index. */
+  private[pipeline] val MaxDriverKeys = 65536
+
   /** Leading 60 bits of an md5 hex string as a positive long (15
     * nibbles; 60 not 64 keeps the value positive, see
     * [[DedupOps.SimhashBits]]).
@@ -175,7 +180,7 @@ object DedupIndex {
     * against the full (slim) index.
     */
   def probeDigest(spark: SparkSession, dir: String, batch: DataFrame,
-      idCol: String, textCol: String, maxDriverKeys: Int = 65536)
+      idCol: String, textCol: String, maxDriverKeys: Int = MaxDriverKeys)
       : DataFrame =
     probeDigestKeyed(spark, dir,
       batch.select(col(idCol).cast("long").as("new_id"),
@@ -187,7 +192,7 @@ object DedupIndex {
     * null text to a sentinel so null documents deduplicate).
     */
   def probeDigestKeyed(spark: SparkSession, dir: String, batch: DataFrame,
-      maxDriverKeys: Int = 65536): DataFrame =
+      maxDriverKeys: Int = MaxDriverKeys): DataFrame =
     probeDigestKeyed(partsFor(spark, dir, "digest", None), batch,
       maxDriverKeys)
 
@@ -212,7 +217,7 @@ object DedupIndex {
     * (entirely map-side: shingles → signature → bands in one lineage,
     * cf. [[DedupOps.minhashSignature]]).
     */
-  private[graft] def bandedRows(docs: DataFrame, idCol: String, textCol: String,
+  private def bandedRows(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int, numHashes: Int, bands: Int): DataFrame =
     bandedRowsFromShingles(
       DedupOps.shingleArrays(docs, idCol, textCol, shingleN), numHashes,
@@ -273,7 +278,7 @@ object DedupIndex {
   def probeMinhash(spark: SparkSession, dir: String, batch: DataFrame,
       corpusDocs: DataFrame, idCol: String, textCol: String,
       shingleN: Int, numHashes: Int, bands: Int, threshold: Double,
-      maxDriverKeys: Int = 65536,
+      maxDriverKeys: Int = MaxDriverKeys,
       checkpointCandidates: Boolean = false): DataFrame = {
     // Batch-side frames feed several plan branches (probe-key collect,
     // candidate join, verification) and are recomputed per action; NOT
@@ -391,7 +396,7 @@ object DedupIndex {
 
   /** `(hkey, <fpCol>, …)` band-pair rows for a fingerprint column (one
     * row per band pair; hkey injective over (pair id, pair value)). */
-  private[graft] def simhashWithBands(sim: DataFrame, fpCol: String): DataFrame = {
+  private def simhashWithBands(sim: DataFrame, fpCol: String): DataFrame = {
     val bandBits = DedupOps.SimhashBits / DedupOps.SimhashBands
     def bandVal(b: Int) =
       shiftright(col(fpCol), bandBits * b)
@@ -410,7 +415,7 @@ object DedupIndex {
     */
   def probeSimhash(spark: SparkSession, dir: String, batch: DataFrame,
       idCol: String, textCol: String, maxDist: Int,
-      maxDriverKeys: Int = 65536): DataFrame = {
+      maxDriverKeys: Int = MaxDriverKeys): DataFrame = {
     val bsim0 = DedupOps.simhash(batch, idCol, textCol)
       .select(col("id").as("j"), col("simhash").as("bfp"))
     // batch fingerprints as a LOCAL RELATION when bounded (r15,
@@ -523,8 +528,8 @@ object DedupIndex {
     */
   def probeEmbedding(spark: SparkSession, dir: String, batch0: DataFrame,
       planes: Seq[Seq[Double]], planesPerBand: Int, threshold: Double,
-      maxDriverKeys: Int = 65536,
-      maxExpectedBucketRows: Long = 4L * LshConfig.TargetBucketRows,
+      maxDriverKeys: Int = MaxDriverKeys,
+      maxExpectedBucketRows: Long = LshConfig.MaxExpectedBucketRows,
       maxBroadcastRows: Long = 1000000L): DataFrame = {
     // batch vectors as a LOCAL RELATION when bounded — see
     // probeSimhash: the batch frame feeds the band-key collect, the
@@ -656,7 +661,6 @@ object DedupIndex {
       idCol: String, textCol: String, segWords: Int = 10,
       rowsPerFile: Long = 1000000L,
       incrementTag: Option[String] = None,
-      maxDriverKeys: Int = 65536,
       maxSegments: Option[Int] = None): Unit = {
     val ds = new OrderedDataset(spark, dir)
     if (ds.exists) requireCfg(ds, "segments", Some(s"w$segWords"))
@@ -686,8 +690,8 @@ object DedupIndex {
     * equi-join above). Returns the segmentDedup output shape for the
     * batch. Call [[buildSegments]] with the same batch afterwards to
     * extend the index.
-    */
-  /** `includeBatchDf = false` drops the batch-internal contribution
+    *
+    * `includeBatchDf = false` drops the batch-internal contribution
     * from the verdict — the REPLAY mode: when the index already holds
     * this increment (its tag matches), counting the batch again would
     * double its own segments and strip MORE than the original attempt
@@ -696,7 +700,7 @@ object DedupIndex {
   def dedupBatchSegments(spark: SparkSession, dir: String,
       batch: DataFrame, idCol: String, textCol: String,
       segWords: Int = 10, dfMin: Long = 2L,
-      maxDriverKeys: Int = 65536, textOut: Boolean = false,
+      maxDriverKeys: Int = MaxDriverKeys, textOut: Boolean = false,
       includeBatchDf: Boolean = true): DataFrame = {
     val segs = DedupOps.segmentTable(batch, idCol, textCol, segWords)
       .withColumn("segd", md5(col("seg")))
@@ -742,7 +746,6 @@ object DedupIndex {
       idCol: String, textCol: String, k: Int = 8,
       rowsPerFile: Long = 1000000L,
       incrementTag: Option[String] = None,
-      maxDriverKeys: Int = 65536,
       maxSegments: Option[Int] = None): Unit = {
     val ds = new OrderedDataset(spark, dir)
     if (ds.exists) requireCfg(ds, "spans", Some(s"k$k"))
@@ -769,10 +772,10 @@ object DedupIndex {
 
   /** Duplicated-span removal for a BATCH against the persisted gram
     * index: a batch gram position is covered when (index occurrences)
-    * + (batch occurrences) reaches `minCount` — spanDedup's global
-    * rule evaluated over corpus ∪ batch, restricted to the batch's
-    * documents. Probe cost ∝ batch grams (zone-map point reads under
-    * `maxDriverKeys`, slim equi-join above); output is the
+    * + (batch occurrences) reaches [[DedupOps.SpanMinCount]] —
+    * spanDedup's global rule evaluated over corpus ∪ batch, restricted
+    * to the batch's documents. Probe cost ∝ batch grams (zone-map point
+    * reads under [[MaxDriverKeys]], slim equi-join above); output is the
     * [[DedupOps.spanDedup]] shape. `includeBatchCnt = false` is the
     * replay mode, mirroring [[dedupBatchSegments]]'s contract. Call
     * [[buildSpanGrams]] with the same batch afterwards to extend the
@@ -789,9 +792,7 @@ object DedupIndex {
     */
   def dedupBatchSpans(spark: SparkSession, dir: String,
       batch: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, minCount: Long = 2L,
-      maxDriverKeys: Int = 65536, textOut: Boolean = false,
-      includeBatchCnt: Boolean = true): DataFrame = {
+      k: Int = 8, includeBatchCnt: Boolean = true): DataFrame = {
     val base = batch.select(col(idCol).cast("long").as("id"),
       TextOps.wsTokens(col(textCol)).as("ws"))
     val grams = DedupOps.spanGramTable(base, k)
@@ -806,7 +807,7 @@ object DedupIndex {
       else {
         val scanned = IndexSegments.scanForProbes(parts,
           grams.select(hkey60(col("h")).as("hkey")).distinct(),
-          maxDriverKeys)
+          MaxDriverKeys)
         // occurrence counts SUM across base + delta segments; clamped
         // at zero so a decrement segment (removeCountedDocs) can
         // cancel corpus counts but never suppress the batch's own
@@ -819,14 +820,14 @@ object DedupIndex {
     val own = if (includeBatchCnt) col("bcnt") else lit(0L)
     val verdict = bcnt.join(idx, col("bgd") === col("ogd"), "left")
       .select(col("bgd"),
-        ((own + coalesce(col("ocnt"), lit(0L))) >= minCount)
+        ((own + coalesce(col("ocnt"), lit(0L))) >= DedupOps.SpanMinCount)
           .as("__dup"))
     val dupPos = grams
       .join(verdict, col("h") === col("bgd"))
       .filter(col("__dup"))
       .groupBy("id")
       .agg(sort_array(collect_list(col("pos"))).as("dps"))
-    DedupOps.spanAssemble(base, dupPos, k, idCol, textOut)
+    DedupOps.spanAssemble(base, dupPos, k, idCol, textOut = false)
   }
 
   /** Take documents DOWN from an aggregate-COUNT index kind (spans /
@@ -950,16 +951,6 @@ object DedupIndex {
     }
   }
 
-  /** Fold every live delta segment of the index at `dir` back into its
-    * base run — the LSM compaction twin of the O(increment) adds
-    * ([[IndexSegments.compact]]), dispatched on the index kind recorded
-    * in the base kv. Handles the two-level kinds (simhash, embedding)
-    * by compacting both sub-datasets. `rowsPerFile` sizes the rewritten
-    * base files (default: keep the base's current target by passing the
-    * largest base file's rows). Returns #segments folded (summed across
-    * sub-datasets). Probes are unchanged before and after — folding
-    * only moves rows between union members.
-    */
   /** The operational policy knob over [[compactIndex]]: fold only when
     * live delta segments have reached `maxSegments` (probe read
     * amplification = #live segments + 1, so this bounds it). Call
@@ -967,24 +958,33 @@ object DedupIndex {
     * `maxSegments` O(increment) adds, amortized. Returns segments
     * folded (0 = under threshold). */
   def compactIndexIfNeeded(spark: SparkSession, dir: String,
-      maxSegments: Int = 8, rowsPerFile: Option[Long] = None): Int = {
+      maxSegments: Int = 8): Int = {
     require(maxSegments >= 1, s"maxSegments must be >= 1: $maxSegments")
     // two-level kinds keep their segments under dir/bands + dir/members
     val probeDir =
       if (new OrderedDataset(spark, dir).exists) dir else s"$dir/bands"
     val live = IndexSegments.liveParts(spark, probeDir).size - 1
-    if (live >= maxSegments) compactIndex(spark, dir, rowsPerFile) else 0
+    if (live >= maxSegments) compactIndex(spark, dir) else 0
   }
 
-  def compactIndex(spark: SparkSession, dir: String,
-      rowsPerFile: Option[Long] = None): Int = {
+  /** Fold every live delta segment of the index at `dir` back into its
+    * base run — the LSM compaction twin of the O(increment) adds
+    * ([[IndexSegments.compact]]), dispatched on the index kind recorded
+    * in the base kv. Handles the two-level kinds (simhash, embedding)
+    * by compacting both sub-datasets. The rewritten base files keep
+    * the base's current target (the largest base file's rows). Returns
+    * #segments folded (summed across sub-datasets). Probes are
+    * unchanged before and after — folding only moves rows between
+    * union members.
+    */
+  def compactIndex(spark: SparkSession, dir: String): Int = {
+    def baseTarget(base: OrderedDataset): NRows =
+      NRows(math.max(1L, base.meta.files.map(_.rows).foldLeft(0L)(math.max)))
     def one(d: String, orderedOn: String, dup: Seq[String],
         sumCols: Seq[String] = Nil): Int = {
       val base = new OrderedDataset(spark, d)
       require(base.exists, s"no graft index at $d")
-      val rpf = rowsPerFile.getOrElse(
-        math.max(1L, base.meta.files.map(_.rows).foldLeft(0L)(math.max)))
-      IndexSegments.compact(spark, d, WriteOpts(orderedOn, NRows(rpf),
+      IndexSegments.compact(spark, d, WriteOpts(orderedOn, baseTarget(base),
         duplicatesOn = Some(dup)), sumCols)
     }
     val kindOf: String => Option[String] = d => {
@@ -1006,9 +1006,7 @@ object DedupIndex {
       case Some("ivf") | Some("ivfpq") =>
         val base = new OrderedDataset(spark, dir)
         require(base.exists, s"no graft index at $dir")
-        val rpf = rowsPerFile.getOrElse(
-          math.max(1L, base.meta.files.map(_.rows).foldLeft(0L)(math.max)))
-        IndexSegments.compact(spark, dir, WriteOpts("cid", NRows(rpf)))
+        IndexSegments.compact(spark, dir, WriteOpts("cid", baseTarget(base)))
       case Some("segments") =>
         one(dir, "hkey", Seq("segd"), sumCols = Seq("df"))
       case Some("spans") =>

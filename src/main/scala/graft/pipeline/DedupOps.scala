@@ -196,6 +196,10 @@ object DedupOps {
   val SimhashBits = 60
   val SimhashBands = 5
 
+  /** Total occurrences (corpus ∪ batch) at which a k-gram counts as a
+    * duplicated span — [[spanDedup]]'s rule and the span index's. */
+  private[pipeline] val SpanMinCount = 2L
+
   /** The C(SimhashBands, 2) band-pair index, shared with the oracle. */
   val SimhashBandPairs: Seq[(Int, Int)] =
     for {
@@ -322,7 +326,6 @@ object DedupOps {
     * the driver only checks the (scalar) changed-count per round.
     */
   def dupClusters(pairs: DataFrame, maxIter: Int = 20,
-      reliable: Boolean = false,
       driverMaxEdges: Int = 1000000): DataFrame = {
     import org.apache.spark.sql.graftbridge.SparkInternals
     // a null endpoint cannot participate in a component (equi-joins
@@ -378,18 +381,14 @@ object DedupOps {
     val edges = cleanPairs.select(col("i").as("a"), col("j").as("b"))
       .unionByName(cleanPairs.select(col("j").as("a"), col("i").as("b")))
       .persist()
-    // Checkpoint each round: truncates the iterative lineage so plan
-    // size stays constant across rounds. `reliable=true` uses
-    // fault-tolerant checkpoints (requires sc.setCheckpointDir) — at
-    // cluster scale a localCheckpoint block dies with its executor and
-    // kills the job. Seeding with the neighbor-min (one aggregation,
-    // replacing the plain distinct) performs round 1 for free:
-    // diameter-1 components (plain pairs — the bulk of near-dup
-    // graphs) are already converged.
-    def chk(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    var labels = chk(edges.groupBy(col("a").as("id"))
-      .agg(least(min(col("a")), min(col("b"))).as("cluster")))
+    // Local-checkpoint each round: truncates the iterative lineage so
+    // plan size stays constant across rounds. Seeding with the
+    // neighbor-min (one aggregation, replacing the plain distinct)
+    // performs round 1 for free: diameter-1 components (plain pairs —
+    // the bulk of near-dup graphs) are already converged.
+    var labels = edges.groupBy(col("a").as("id"))
+      .agg(least(min(col("a")), min(col("b"))).as("cluster"))
+      .localCheckpoint()
     // Delta propagation: only labels that CHANGED last round can lower
     // a neighbor this round, so the propagation join streams the full
     // edge table against the changed set only (vs all labels). Seed
@@ -403,11 +402,12 @@ object DedupOps {
         .join(changed.select(col("id").as("b2"), col("cluster")),
           col("b") === col("b2"))
         .groupBy(col("a").as("id")).agg(min("cluster").as("nbr"))
-      val next = chk(labels.withColumnRenamed("cluster", "old")
+      val next = labels.withColumnRenamed("cluster", "old")
         .join(prop, Seq("id"), "left")
         .select(col("id"),
           least(col("old"), coalesce(col("nbr"), col("old"))).as("cluster"),
-          col("old")))
+          col("old"))
+        .localCheckpoint()
       changed = next.filter(col("cluster") < col("old"))
         .select("id", "cluster")
       done = changed.isEmpty
@@ -486,7 +486,7 @@ object DedupOps {
   }
 
   /** Duplicated-SPAN removal: OVERLAPPING word k-grams whose corpus-
-    * wide occurrence count is ≥ `minCount` mark every token they
+    * wide occurrence count is ≥ [[SpanMinCount]] mark every token they
     * cover; covered tokens merge into maximal spans and are removed.
     * The any-alignment upgrade over [[segmentDedup]]'s disjoint
     * blocks (the "deduplicating training data" substring-dedup shape
@@ -515,10 +515,8 @@ object DedupOps {
     * documents are exactly what exact dedup removed upstream.
     */
   def spanDedup(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, minCount: Long = 2L, textOut: Boolean = false)
-      : DataFrame =
-    spanDedupTokens(df, idCol, TextOps.wsTokens(col(textCol)), k,
-      minCount, textOut)
+      k: Int = 8, textOut: Boolean = false): DataFrame =
+    spanDedupTokens(df, idCol, TextOps.wsTokens(col(textCol)), k, textOut)
 
   /** [[spanDedup]] over an arbitrary token-array column — the
     * substring-dedup literature (and this engine's own packSequences)
@@ -530,8 +528,7 @@ object DedupOps {
     * TOKENS space-rejoined — BPE tokens never contain spaces).
     */
   def spanDedupTokens(df: DataFrame, idCol: String, toks: Column,
-      k: Int = 8, minCount: Long = 2L, textOut: Boolean = false)
-      : DataFrame = {
+      k: Int = 8, textOut: Boolean = false): DataFrame = {
     require(k >= 2, s"span gram width must be >= 2, got $k")
     val base = df.select(col(idCol).cast("long").as("id"),
       toks.as("ws"))
@@ -554,7 +551,7 @@ object DedupOps {
     val wHash = Window.partitionBy(col("hb"))
     val dupPos = slim
       .withColumn("cnt", count(lit(1)).over(wHash))
-      .filter(col("cnt") >= minCount)
+      .filter(col("cnt") >= SpanMinCount)
       .groupBy("id")
       .agg(sort_array(collect_list(col("pos"))).as("dps"))
     spanAssemble(base, dupPos, k, idCol, textOut)

@@ -381,34 +381,14 @@ object IndexSegments {
     filesOpened: Int)
 
   /** Tier/IO of the most recent [[scanForProbes]] PLAN in this JVM —
-    * read by the probe benches ([[graft.SpanRegimeBench]]) so the
-    * files-opened claim is recorded, not argued. Plan-time telemetry:
+    * read by the probe specs (and by the retired span-regime bench,
+    * SCALE.md "Retired experiment mains") so the files-opened claim
+    * is recorded, not argued. Plan-time telemetry:
     * set when the scan is built, which is when file selection happens.
     */
   val lastProbeStats =
     new java.util.concurrent.atomic.AtomicReference[ProbeStats]()
 
-  /** The probe-cardinality dispatch over the union (the segmented form
-    * of the old single-dataset scanForProbes): collect up to
-    * `maxDriverKeys + 1` distinct probe keys in ONE job; under the
-    * cap, zone-map-route the SAME key set through every part
-    * (driver-planned multi-point reads). OVER the cap (r13, VERDICT
-    * r12 #3): a mid tier first — the probe keys are routed to sidecar
-    * files DISTRIBUTIVELY (each part's zone map travels to executors
-    * as a broadcast boundary table; a binary search per key finds its
-    * covering files; the distinct hit set — bounded by the union's
-    * FILE count, never the key count — comes back to the driver), and
-    * only the hit files are scanned into the caller's equi-join. A
-    * probe set that genuinely covers every file degrades to exactly
-    * the old full-union scan, having paid one extra pass over the
-    * keys; a clustered or partial probe set opens a fraction of the
-    * index. Non-long ordered keys (no index in the family uses any)
-    * fall back to the full union scan.
-    * `dedupCols`, when non-empty and more than one part is live,
-    * dedups rows that an (out-of-contract) re-add duplicated across
-    * segments — presence probes keep their one-row-per-key contract;
-    * the arbitrary survivor mirrors the old upsert's keep-last.
-    */
   /** The under-cap point-read tier of [[scanForProbes]] with an
     * ALREADY-COLLECTED key set (r15, VERDICT r14 #3 "batched probe"):
     * probe paths that have just collected their bounded candidate
@@ -475,6 +455,27 @@ object IndexSegments {
     else u
   }
 
+  /** The probe-cardinality dispatch over the union (the segmented form
+    * of the old single-dataset scanForProbes): collect up to
+    * `maxDriverKeys + 1` distinct probe keys in ONE job; under the
+    * cap, zone-map-route the SAME key set through every part
+    * (driver-planned multi-point reads). OVER the cap (r13, VERDICT
+    * r12 #3): a mid tier first — the probe keys are routed to sidecar
+    * files DISTRIBUTIVELY (each part's zone map travels to executors
+    * as a broadcast boundary table; a binary search per key finds its
+    * covering files; the distinct hit set — bounded by the union's
+    * FILE count, never the key count — comes back to the driver), and
+    * only the hit files are scanned into the caller's equi-join. A
+    * probe set that genuinely covers every file degrades to exactly
+    * the old full-union scan, having paid one extra pass over the
+    * keys; a clustered or partial probe set opens a fraction of the
+    * index. Non-long ordered keys (no index in the family uses any)
+    * fall back to the full union scan.
+    * `dedupCols`, when non-empty and more than one part is live,
+    * dedups rows that an (out-of-contract) re-add duplicated across
+    * segments — presence probes keep their one-row-per-key contract;
+    * the arbitrary survivor mirrors the old upsert's keep-last.
+    */
   def scanForProbes(parts: Seq[Part], probeKeys: DataFrame,
       maxDriverKeys: Int, dedupCols: Seq[String] = Nil): DataFrame = {
     require(parts.nonEmpty, "no index parts")

@@ -78,6 +78,11 @@ object LshConfig {
     */
   val TargetBucketRows = 500L
 
+  /** Saturation cap of the LSH pair operators' fail-fast: a band space
+    * whose uniform-hash occupancy estimate exceeds this many rows per
+    * bucket is too narrow for the corpus. */
+  private[pipeline] val MaxExpectedBucketRows: Long = 4L * TargetBucketRows
+
   /** Row budget for the grouped pair loop's sampled shape probe
     * ([[SimilarityOps.estimatedTopBucket]]): the probe bands at most
     * this many sampled vectors regardless of corpus size, so its cost
@@ -115,23 +120,20 @@ object LshConfig {
   val FastPathHeadroom = 8.0
 
   /** Size the band width for an n-vector corpus:
-    * `bits = clamp(ceil(log2(n / TargetBucketRows)), minBits, maxBits)`,
-    * `nPlanes = nBands · bits`. Driver scale factors (500 / 2k / 20k
-    * vectors) all resolve to the historical 24×6; the 200k corpus that
-    * killed the fixed config resolves to 36×9 (512 buckets/band).
+    * `bits = clamp(ceil(log2(n / TargetBucketRows)), MinBits, MaxBits)`,
+    * `nPlanes = DefaultBands · bits`. The test-data scale factors
+    * (500 / 2k / 20k vectors) all resolve to the historical 24×6; the
+    * 200k corpus that killed the fixed config resolves to 36×9 (512
+    * buckets/band).
     */
-  def forCorpusSize(n: Long, nBands: Int = DefaultBands,
-      minBits: Int = MinBits, maxBits: Int = MaxBits): LshConfig = {
+  def forCorpusSize(n: Long): LshConfig = {
     require(n >= 0, s"corpus size must be >= 0, got $n")
-    require(nBands > 0, s"nBands must be positive, got $nBands")
-    require(minBits > 0 && maxBits >= minBits,
-      s"need 0 < minBits <= maxBits, got $minBits..$maxBits")
     val raw =
-      if (n <= TargetBucketRows) minBits
+      if (n <= TargetBucketRows) MinBits
       else math.ceil(
         math.log(n.toDouble / TargetBucketRows) / math.log(2.0)).toInt
-    val bits = math.min(maxBits, math.max(minBits, raw))
-    LshConfig(nBands * bits, bits)
+    val bits = math.min(MaxBits, math.max(MinBits, raw))
+    LshConfig(DefaultBands * bits, bits)
   }
 
   /** Per-band collision probability of two vectors at cosine `t` under

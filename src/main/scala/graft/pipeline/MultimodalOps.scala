@@ -50,12 +50,6 @@ object MultimodalOps {
   final case class ImageFeatures(id: Long, ok: Boolean, width: Int,
                                  height: Int, luma_sum: Long)
 
-  /** Decode one image payload with javax.imageio: (width, height,
-    * Σ integer luma) where per-pixel luma is the ITU-R 601 integer
-    * form `(299·R + 587·G + 114·B) / 1000` — exactly `g` for gray
-    * pixels, so features stay engine-exact integers. Returns None for
-    * null/empty/corrupt/non-image payloads.
-    */
   /** Headers are validated BEFORE pixel allocation: a corrupt or
     * adversarial header declaring absurd dimensions would otherwise
     * drive ImageIO into a multi-GB BufferedImage and an
@@ -101,6 +95,12 @@ object MultimodalOps {
     new javax.imageio.stream.MemoryCacheImageInputStream(
       new java.io.ByteArrayInputStream(bytes))
 
+  /** Decode one image payload with javax.imageio: (width, height,
+    * Σ integer luma) where per-pixel luma is the ITU-R 601 integer
+    * form `(299·R + 587·G + 114·B) / 1000` — exactly `g` for gray
+    * pixels, so features stay engine-exact integers. Returns None for
+    * null/empty/corrupt/non-image payloads.
+    */
   private def decodeImage(raw: Array[Byte]): Option[(Int, Int, Long)] = {
     val bytes = orEmpty(raw)
     if (bytes.isEmpty) None
@@ -412,10 +412,11 @@ object MultimodalOps {
     * the image near-dup fingerprint, at byte granularity like the
     * other multimodal stubs (a media library would replace the
     * sampling with decoded-pixel luma; the hashing, banding and
-    * Hamming machinery downstream are the real thing): sample `bits`
-    * evenly-spaced positions (the [[resize]] nearest-neighbor rule),
-    * set bit i when sample·bits > Σsamples (integer compare — no
-    * division, engine-exact), pack little-endian into a long.
+    * Hamming machinery downstream are the real thing): sample
+    * `bits` = [[DedupOps.SimhashBits]] evenly-spaced positions (the
+    * [[resize]] nearest-neighbor rule), set bit i when
+    * sample·bits > Σsamples (integer compare — no division,
+    * engine-exact), pack little-endian into a long.
     *
     * The output plugs STRAIGHT into [[DedupOps.simhashPairs]] (same
     * 60-bit width and banding), giving banded perceptual near-dup
@@ -424,8 +425,9 @@ object MultimodalOps {
     * per row. ASCII-payload view (`string` column), matching the
     * fixture's text-as-bytes convention.
     */
-  def withAHash(df: DataFrame, idCol: String, payloadCol: String,
-      bits: Int = 60): DataFrame = {
+  def withAHash(df: DataFrame, idCol: String, payloadCol: String)
+      : DataFrame = {
+    val bits = DedupOps.SimhashBits
     val n = length(col(payloadCol))
     // UNROLLED over the (static) bit positions instead of HOF lambdas:
     // higher-order functions evaluate interpreted per element, while

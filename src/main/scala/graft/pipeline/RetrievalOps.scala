@@ -154,13 +154,13 @@ object RetrievalOps {
     * (the 2-arm results are identical to the r11 full-outer-join
     * form: both compute the same exact integer sums per (q_id,
     * doc_id); only the plan shape changed). */
-  def rrfFuse(armA: DataFrame, armB: DataFrame, k: Int, k0: Int = RrfK)
-      : DataFrame = rrfFuseN(Seq(armA, armB), k, k0)
+  def rrfFuse(armA: DataFrame, armB: DataFrame, k: Int): DataFrame =
+    rrfFuseN(Seq(armA, armB), k)
 
   /** Reciprocal-rank fusion of N ≥ 2 ranked lists (Cormack/Clarke/
-    * Buettcher 2009): each arm contributes 1/(k0+rank), a document
-    * missing from an arm contributes nothing. Contributions are
-    * quantized to nano-units (`round(1e9/(k0+rank))` as BIGINT — one
+    * Buettcher 2009): each arm contributes 1/([[RrfK]]+rank), a
+    * document missing from an arm contributes nothing. Contributions are
+    * quantized to nano-units (`round(1e9/(RrfK+rank))` as BIGINT — one
     * IEEE division per rank, identical in any engine) so the fused
     * score is an exact integer sum in any addition order and any arm
     * order. Input arms: (q_id, doc_id, rank); output: (q_id, rank,
@@ -172,13 +172,12 @@ object RetrievalOps {
     * joins would pay N−1 (each arm is already a bounded top-pool per
     * query, so the union is small by construction).
     */
-  def rrfFuseN(arms: Seq[DataFrame], k: Int, k0: Int = RrfK)
-      : DataFrame = {
+  def rrfFuseN(arms: Seq[DataFrame], k: Int): DataFrame = {
     require(arms.size >= 2, s"rrf fusion wants >= 2 arms, got ${arms.size}")
     val contribs = arms.map(df =>
       df.select(col("q_id").cast("long").as("q_id"),
         col("doc_id").cast("long").as("doc_id"),
-        round(lit(1e9) / (lit(k0).cast("double") + col("rank")
+        round(lit(1e9) / (lit(RrfK).cast("double") + col("rank")
           .cast("double"))).cast("long").as("c")))
     val fused = contribs.reduce(_ unionByName _)
       .groupBy("q_id", "doc_id")

@@ -82,15 +82,14 @@ object SampleOps {
     * pure function of content identity — reproducible across runs,
     * engines and partitionings). Weights below 1 degenerate to plain
     * deterministic down-sampling, so one operator covers both sides
-    * of the mix. Output: (source, id, copy) plus `keep` columns —
-    * feed a composite of the three into [[shuffleCoords]] for the
-    * training order.
+    * of the mix. Output: (source, id, copy) — feed a composite of the
+    * three into [[shuffleCoords]] for the training order.
     *
     * Map-side only: a bounded copies array per row exploded in place;
     * no shuffle, no state, unions are cheap plan branches.
     */
   def upsampleMix(sources: Seq[(String, DataFrame, Double)],
-      idCol: String, keep: Seq[String] = Nil): DataFrame = {
+      idCol: String): DataFrame = {
     require(sources.nonEmpty, "no sources")
     require(sources.map(_._1).distinct.size == sources.size,
       "duplicate source tags")
@@ -104,10 +103,9 @@ object SampleOps {
       val n = lit(full) + extra
       val copies = when(n >= 1L, sequence(lit(0L), n - 1L))
         .otherwise(array().cast("array<bigint>"))
-      df.select(lit(tag).as("source") +: col(idCol).as("id") +:
-          copies.as("__c") +: keep.map(col): _*)
-        .select(col("source") +: col("id") +:
-          explode(col("__c")).as("copy") +: keep.map(col): _*)
+      df.select(lit(tag).as("source"), col(idCol).as("id"),
+          copies.as("__c"))
+        .select(col("source"), col("id"), explode(col("__c")).as("copy"))
     }.reduce(_ unionByName _)
   }
 

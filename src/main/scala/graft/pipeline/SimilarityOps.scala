@@ -184,16 +184,15 @@ object SimilarityOps {
     * Initialization is the deterministic id-subset quantizer (the
     * IVF seed), so the whole training run is reproducible. Each round
     * is one assignment + one aggregate; `localCheckpoint` breaks the
-    * per-round lineage growth (MLlib's iterative discipline — pass
-    * reliable=true at cluster scale to survive executor loss, same
-    * knob as [[DedupOps.dupClusters]]).
+    * per-round lineage growth (MLlib's iterative discipline, as in
+    * [[DedupOps.dupClusters]]).
     *
     * Returns the final centroid table (id=cid, vec, norm) — feed
     * straight into [[ivfAssignTo]] / [[IvfIndex]] as the trained
     * quantizer.
     */
-  def kmeansTrain(corpus: DataFrame, initFilter: Column, iters: Int,
-      reliable: Boolean = false): DataFrame = {
+  def kmeansTrain(corpus: DataFrame, initFilter: Column, iters: Int)
+      : DataFrame = {
     import org.apache.spark.sql.graftbridge.SparkInternals
     require(iters >= 0, s"negative iters: $iters")
     var cents = corpus.filter(initFilter).select("id", "vec", "norm")
@@ -206,7 +205,7 @@ object SimilarityOps {
         .select(col("cid").as("id"),
           transform(col("__kv"), _.getField("c_mean")).as("vec"))
         .withColumn("norm", sqrt(dot(col("vec"), col("vec"))))
-      val mat = if (reliable) vecs.checkpoint() else vecs.localCheckpoint()
+      val mat = vecs.localCheckpoint()
       prev.foreach(SparkInternals.unpersistCheckpoint)
       prev = Some(mat)
       cents = mat
@@ -278,16 +277,15 @@ object SimilarityOps {
     * wide plane sets: see the cliff note on [[lshBands]].
     */
   private[graft] def lshBandsComposed(df: DataFrame,
-      planes: Seq[Seq[Double]], planesPerBand: Int,
-      keep: Seq[String] = Nil): DataFrame = {
+      planes: Seq[Seq[Double]], planesPerBand: Int): DataFrame = {
     val bits: Seq[Column] = planes.map { p =>
       val pv = array(p.map(lit(_)): _*)
       when(dot(col("vec"), pv) >= 0, lit(1)).otherwise(lit(0))
     }
     val bands = bits.grouped(planesPerBand).toSeq.map(g =>
       concat(g.map(_.cast("string")): _*))
-    df.select(col("id") +: keep.map(col) :+
-      posexplode(array(bands: _*)).as(Seq("band_id", "bucket")): _*)
+    df.select(col("id"),
+      posexplode(array(bands: _*)).as(Seq("band_id", "bucket")))
   }
 
   /** Explicit bucket-occupancy diagnostic for the banded join: one row
@@ -408,8 +406,7 @@ object SimilarityOps {
     * in-bucket work is quadratic.
     */
   private def requireUnsaturated(op: String, n: Long, nPlanes: Int,
-      planesPerBand: Int, maxExpectedBucketRows: Long,
-      chunked: Boolean): Unit = {
+      planesPerBand: Int, chunked: Boolean): Unit = {
     require(planesPerBand > 0 && planesPerBand <= 62,
       s"planesPerBand must be in 1..62, got $planesPerBand")
     val rem = nPlanes % planesPerBand
@@ -421,12 +418,13 @@ object SimilarityOps {
       (if (rem > 0) Seq(rem) else Nil)
     val expPairs = widths.map(w =>
       n.toDouble * n.toDouble / (2.0 * (1L << w).toDouble)).sum
-    require(occ <= maxExpectedBucketRows.toDouble || (chunked && atCeiling),
+    require(occ <= LshConfig.MaxExpectedBucketRows.toDouble ||
+        (chunked && atCeiling),
       f"$op: band space saturated — $minWidth-bit " +
         (if (rem > 0) "(ragged final) " else "") +
         f"bands expect $occ%.0f rows/bucket for a $n-vector corpus " +
-        f"(cap $maxExpectedBucketRows, ~$expPairs%.3g candidate " +
-        "pairs); widen the key space (LshConfig.forCorpusSize" +
+        f"(cap ${LshConfig.MaxExpectedBucketRows}, ~$expPairs%.3g " +
+        "candidate pairs); widen the key space (LshConfig.forCorpusSize" +
         (if (rem > 0) "; or drop/widen the ragged final band" else "") +
         ")" +
         (if (chunked) "" else
@@ -476,9 +474,9 @@ object SimilarityOps {
     *
     * `corpusCount`, when the caller already knows it, arms the
     * SATURATION fail-fast: if the uniform-hash occupancy estimate
-    * `n / 2^bits` exceeds `maxExpectedBucketRows`, the band space is
-    * too narrow for the corpus and the join blows up quadratically
-    * per bucket (the measured 200k-vector/6-bit death, SCALE.md
+    * `n / 2^bits` exceeds [[LshConfig.MaxExpectedBucketRows]], the
+    * band space is too narrow for the corpus and the join blows up
+    * quadratically per bucket (the measured 200k-vector/6-bit death, SCALE.md
     * round-5d) — die here with the remedy named instead of filling
     * the disk. Occupancy, not total candidates, is the right gate:
     * a PROPERLY sized space keeps buckets ~constant while candidates
@@ -497,14 +495,12 @@ object SimilarityOps {
   def lshNearDupPairs(df: DataFrame, planes: Seq[Seq[Double]],
       planesPerBand: Int, threshold: Double,
       maxBucketSize: Int = 100000,
-      corpusCount: Option[Long] = None,
-      maxExpectedBucketRows: Long = 4L * LshConfig.TargetBucketRows)
-      : DataFrame = {
+      corpusCount: Option[Long] = None): DataFrame = {
     require(maxBucketSize > 0,
       s"maxBucketSize must be positive, got $maxBucketSize")
     corpusCount.foreach { n =>
       requireUnsaturated("lshNearDupPairs", n, planes.size, planesPerBand,
-        maxExpectedBucketRows, chunked = false)
+        chunked = false)
     }
     // vectors ride the banded rows: the bucket join IS the verify step
     val banded0 = lshBands(df, planes, planesPerBand,
@@ -636,7 +632,6 @@ object SimilarityOps {
       planesPerBand: Int, threshold: Double,
       maxBucketSize: Int = 100000,
       corpusCount: Option[Long] = None,
-      maxExpectedBucketRows: Long = 4L * LshConfig.TargetBucketRows,
       chunkSize: Int = LshConfig.DefaultChunkRows,
       assumeTemplateSkew: Boolean = false,
       dualChunkProjections: Boolean = true,
@@ -664,7 +659,7 @@ object SimilarityOps {
         "LshConfig.forCorpusSize sizes a plane set")
     corpusCount.foreach { n =>
       requireUnsaturated("lshNearDupPairsGrouped", n, planes.size,
-        planesPerBand, maxExpectedBucketRows, chunked = true)
+        planesPerBand, chunked = true)
     }
     val spark = df.sparkSession
     import spark.implicits._
@@ -1061,28 +1056,27 @@ object SimilarityOps {
     if (dualChunkProjections) joined.distinct() else joined
   }
 
+  private val CentroidIdStep = 25L
+  private val MinCentroids = 200L
+  private val MaxCentroids = 1000000L
+
   /** The semantic-dedup / IVF k-sizing contract AS CODE (SCALE.md:
     * production keeps centroids ~√n so clusters stay constant-sized
     * and [[semanticDupPairs]]' chunk cap never binds): deterministic
-    * id-subset quantizer predicate `id % idStep == 0 && id <
-    * idStep·k` with `k = clamp(ceil(√n), minCentroids,
-    * maxCentroids)`. The floor is the historical fixed cap
+    * id-subset quantizer predicate `id % CentroidIdStep == 0 && id <
+    * CentroidIdStep·k` with `k = clamp(ceil(√n), MinCentroids,
+    * MaxCentroids)`. The floor is the historical fixed cap
     * (CentroidCap 5000 = 25·200), so every driver scale factor (n ≤
-    * 200k... √n ≤ 448 only binds past n = minCentroids² = 40k)
+    * 200k... √n ≤ 448 only binds past n = MinCentroids² = 40k)
     * resolves to a SUPERSET cap of its id range or the exact
     * historical predicate — centroid sets at driver SFs are unchanged
     * and every oracle stays byte-identical (pinned by spec).
     */
-  def centroidFilterForCorpus(n: Long, idStep: Long = 25L,
-      minCentroids: Long = 200L,
-      maxCentroids: Long = 1000000L): Column = {
-    require(n >= 0 && idStep > 0 && minCentroids > 0 &&
-      maxCentroids >= minCentroids,
-      s"bad centroid sizing args: n=$n idStep=$idStep " +
-        s"min=$minCentroids max=$maxCentroids")
-    val k = math.min(maxCentroids,
-      math.max(minCentroids, math.ceil(math.sqrt(n.toDouble)).toLong))
-    col("id") % idStep === 0 && col("id") < idStep * k
+  def centroidFilterForCorpus(n: Long): Column = {
+    require(n >= 0, s"corpus size must be >= 0, got $n")
+    val k = math.min(MaxCentroids,
+      math.max(MinCentroids, math.ceil(math.sqrt(n.toDouble)).toLong))
+    col("id") % CentroidIdStep === 0 && col("id") < CentroidIdStep * k
   }
 
   /** Explicit cluster-occupancy diagnostic for [[semanticDupPairs]]:

@@ -47,22 +47,28 @@ object TextOps {
     * errs on the side of scrubbing). */
   val Ipv4Re = "[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}"
 
+  /** Placeholder tokens the scrubs substitute. */
+  private val UrlMask = "<URL>"
+  private val EmailMask = "<EMAIL>"
+  private val PhoneMask = "<PHONE>"
+  private val IpMask = "<IP>"
+
   /** Replace every URL with a placeholder token. */
-  def scrubUrls(text: Column, repl: String = "<URL>"): Column =
-    regexp_replace(text, UrlRe, repl)
+  def scrubUrls(text: Column): Column =
+    regexp_replace(text, UrlRe, UrlMask)
 
   /** Replace every email address with a placeholder token (the
     * PII-masking baseline; richer PII classes plug in the same way). */
-  def scrubEmails(text: Column, repl: String = "<EMAIL>"): Column =
-    regexp_replace(text, EmailRe, repl)
+  def scrubEmails(text: Column): Column =
+    regexp_replace(text, EmailRe, EmailMask)
 
   /** Replace phone numbers (the second PII class; see PhoneRe). */
-  def scrubPhones(text: Column, repl: String = "<PHONE>"): Column =
-    regexp_replace(text, PhoneRe, repl)
+  def scrubPhones(text: Column): Column =
+    regexp_replace(text, PhoneRe, PhoneMask)
 
   /** Replace IPv4 addresses (the third PII class; see Ipv4Re). */
-  def scrubIps(text: Column, repl: String = "<IP>"): Column =
-    regexp_replace(text, Ipv4Re, repl)
+  def scrubIps(text: Column): Column =
+    regexp_replace(text, Ipv4Re, IpMask)
 
   /** Collapse runs of spaces and trim — the normalize pass after
     * scrubbing. */
@@ -183,12 +189,16 @@ object TextOps {
       round(length(text).cast("double") / size(ws), 6).as("avg_token_len"))
   }
 
+  /** Shingle width, in characters, of the document fingerprint. */
+  private val FingerprintChars = 8
+
   /** Rolling-hash-style document fingerprint (winnowing-lite): the
-    * lexicographic min/max md5 of all 8-char shingles. Equal-length
-    * lowercase hex compares lexicographically == numerically, so this
-    * is engine-portable without any int conversion.
+    * lexicographic min/max md5 of all [[FingerprintChars]]-char
+    * shingles. Equal-length lowercase hex compares lexicographically ==
+    * numerically, so this is engine-portable without any int conversion.
     */
-  def fingerprintCols(text: Column, n: Int = 8): Seq[Column] = {
+  def fingerprintCols(text: Column): Seq[Column] = {
+    val n = FingerprintChars
     val hashes = transform(upTo(length(text) - (n - 1)),
       i => md5(text.substr(i, lit(n))))
     Seq(array_min(hashes).as("fp_min"), array_max(hashes).as("fp_max"))
@@ -303,7 +313,7 @@ object TextOps {
     * aggregate loses to one interpreted HOF pass per row.)
     */
   def fingerprintDF(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, n: Int = 8): org.apache.spark.sql.DataFrame =
+      textCol: String): org.apache.spark.sql.DataFrame =
     // ONE JVM loop since r15 (graft.functions.Shingles.md5WindowMinMax)
     // — the transform/substr/md5 + array_min/max composition paid a
     // from-byte-0 substr walk, a one-shot digest and a hex render per
@@ -311,7 +321,8 @@ object TextOps {
     // output (PipelineSpec pins it against fingerprintCols, which
     // keeps the composition form precisely as that pin).
     df.select(col(idCol),
-        graft.functions.Shingles.md5WindowMinMaxCol(col(textCol), n)
+        graft.functions.Shingles.md5WindowMinMaxCol(col(textCol),
+            FingerprintChars)
           .as("__h"))
       .select(col(idCol),
         col("__h.fp_min").as("fp_min"),

@@ -312,13 +312,6 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
   def rangeDF(lo: Option[OrdVal], hiExcl: Option[OrdVal]): DataFrame =
     rangeDFOf(meta, lo, hiExcl)
 
-  /** [[rangeDF]] against a retained snapshot generation — the pruned
-    * form of [[dfAsOf]] (zone maps travel in the archived sidecar, so
-    * historical range reads prune exactly like live ones). */
-  def rangeDFAsOf(gen: Long, lo: Option[OrdVal],
-      hiExcl: Option[OrdVal]): DataFrame =
-    rangeDFOf(metaAsOf(gen), lo, hiExcl)
-
   /** [[rangeDF]] against a CAPTURED metadata snapshot (see [[dfOf]]). */
   private[graft] def rangeDFOf(m: DatasetMeta, lo: Option[OrdVal],
       hiExcl: Option[OrdVal]): DataFrame = {
@@ -468,10 +461,9 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     */
   def backfillSketches(cols: Seq[String] = Nil): Int = withWriteLock {
     val m = meta
-    val want =
-      if (cols.nonEmpty) cols
-      else m.kv.get(OrderedDataset.SketchColsKey)
-        .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
+    val sticky =
+      OrderedDataset.stickyCols(m.kv, OrderedDataset.SketchColsKey)
+    val want = if (cols.nonEmpty) cols else sticky
     require(want.nonEmpty,
       "no sketch columns: pass cols or write with WriteOpts.sketchCols")
     val missing = m.files.filter(f => want.exists(!f.hll.contains(_)))
@@ -484,23 +476,14 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
         .groupBy(regexp_extract(input_file_name(), "[^/]+$", 0).as("f"))
         .agg(aggs.head, aggs.tail: _*)
         .collect()
-        .map(r => r.getAs[String]("f") -> want.map { c =>
-          val i = r.fieldIndex(s"hll_$c")
-          val bytes =
-            if (r.isNullAt(i))
-              new org.apache.datasketches.hll.HllSketch(
-                OrderedDataset.HllLgK).toCompactByteArray
-            else r.getAs[Array[Byte]](i)
-          c -> java.util.Base64.getEncoder.encodeToString(bytes)
-        }.toMap).toMap
+        .map(r => r.getAs[String]("f") -> want.map(c =>
+          c -> OrderedDataset.hllBase64(r, s"hll_$c")).toMap).toMap
       val updated = m.files.map { f =>
         byFile.get(f.name).map(h => f.copy(hll = f.hll ++ h)).getOrElse(f)
       }
       Sidecar.write(conf, dir, m.copy(files = updated,
         kv = m.kv + (OrderedDataset.SketchColsKey ->
-          (m.kv.get(OrderedDataset.SketchColsKey)
-            .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil) ++
-            want).distinct.mkString(","))))
+          (sticky ++ want).distinct.mkString(","))))
       missing.size
     }
   }
@@ -517,9 +500,7 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
       try fsys.getFileStatus(new HPath(s"$dir/${f.name}")).getLen
       catch { case _: java.io.FileNotFoundException => 0L }
     }.sum
-    def kvCols(key: String): Seq[String] =
-      m.kv.get(key).map(_.split(",").toSeq.filter(_.nonEmpty))
-        .getOrElse(Nil)
+    def kvCols(key: String) = OrderedDataset.stickyCols(m.kv, key)
     DatasetInfo(
       dir = dir,
       orderedOn = m.orderedOn,
@@ -581,10 +562,6 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
 
   def removeFromDisk(): Unit = fs.delete(new HPath(dir), true)
 
-  /** The ordered upsert (ref write/write.py:78-271; SURVEY §3.1):
-    * plan on the driver from sidecar stats, run ONE Spark job over the
-    * overlapping slice ∪ batch, commit via atomic sidecar swap.
-    */
   /** Advisory exclusive write lock (ref base.py:240-255 flufl lock).
     * Acquisition is atomic (`FileSystem.create` with overwrite=false —
     * fails if the lock exists); while held, a daemon heartbeat refreshes
@@ -807,6 +784,10 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
   def vacuum(olderThanMs: Long = OrderedDataset.retireGraceMs): Int =
     withWriteLock { cleanOrphans(fs, olderThanMs) }
 
+  /** The ordered upsert (ref write/write.py:78-271; SURVEY §3.1):
+    * plan on the driver from sidecar stats, run ONE Spark job over the
+    * overlapping slice ∪ batch, commit via atomic sidecar swap.
+    */
   def write(batch: DataFrame, opts: WriteOpts): UpsertReport =
     withWriteLock { writeBody(batch, opts) }
 
@@ -849,8 +830,9 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     * conflict the prepared tmp output is discarded and the whole
     * write re-plans against the new state, up to `maxAttempts`.
     *
-    * When to use which — MEASURED (graft.OptimisticEconBench,
-    * BENCH_OPTECON_20260816.json; SCALE.md r12): on SHARED compute
+    * When to use which — MEASURED (SCALE.md Round-12c, record
+    * records/BENCH_OPTECON_20260816.json; the retired bench is in
+    * SCALE.md's "Retired experiment mains"): on SHARED compute
     * (one Spark scheduler, N threads) optimistic buys no wall time —
     * 2/4/8 writers read 20.7/39.4/77.3 s vs locked-queued
     * 20.8/41.8/78.9 s, because overlapping prepares contend for the
@@ -883,7 +865,6 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
       try return writeBody(batch, opts, optimistic = true)
       catch {
         case e: OrderedDataset.WriteConflictException =>
-          OrderedDataset.optimisticConflicts.incrementAndGet(): Unit
           if (attempt >= maxAttempts)
             throw new IllegalStateException(
               s"optimistic write of $dir lost its commit race " +
@@ -951,13 +932,13 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     * 100 TB design: files FULLY covered by the range are dropped by a
     * sidecar-only commit — zero data read or written, however large
     * they are. Only boundary files straddling a range edge (at most a
-    * handful) are rewritten, sized by `target` (default: the largest
-    * rewritten file's row count, preserving the dataset's size class).
+    * handful) are rewritten, sized by the largest rewritten file's row
+    * count (preserving the dataset's size class).
     * Commit is the same atomic sidecar swap as upsert; replaced files
     * retire under the reader grace window.
     */
-  def delete(lo: Option[OrdVal], hiExcl: Option[OrdVal],
-      target: Option[RowGroupTarget] = None): DeleteReport = withWriteLock {
+  def delete(lo: Option[OrdVal], hiExcl: Option[OrdVal]): DeleteReport =
+      withWriteLock {
     require(exists, s"no graft dataset at $dir")
     require(lo.isDefined || hiExcl.isDefined,
       "unbounded delete on both sides would empty the dataset; use " +
@@ -972,16 +953,20 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     val dropped = m.files.filter(covered)
     val partial = m.files.filter(f => inRange(f) && !covered(f))
     val kept    = m.files.filterNot(inRange)
-    if (dropped.isEmpty && partial.isEmpty)
-      DeleteReport(0, 0, kept.size, 0L)
-    else if (partial.isEmpty) {
-      // metadata-only delete: swap the sidecar, retire the covered files
+    // metadata-only delete: swap in a sidecar of the untouched files,
+    // retire the covered ones
+    def dropCovered(untouched: Seq[FileStat]): DeleteReport = {
       Sidecar.write(conf, dir,
-        m.copy(files = kept.sortBy(f => (f.min, f.id))))
+        m.copy(files = untouched.sortBy(f => (f.min, f.id))))
       retire(dropped)
       cleanOrphans(fs)
-      DeleteReport(dropped.size, 0, kept.size, dropped.map(_.rows).sum)
-    } else {
+      DeleteReport(dropped.size, 0, untouched.size,
+        dropped.map(_.rows).sum)
+    }
+    if (dropped.isEmpty && partial.isEmpty)
+      DeleteReport(0, 0, kept.size, 0L)
+    else if (partial.isEmpty) dropCovered(kept)
+    else {
       // boundary files: rewrite only them, keeping rows OUTSIDE the range
       val d0 = readFiles(m, partial.map(f => s"$dir/${f.name}"))
       val dt = d0.schema(m.orderedOn).dataType
@@ -1008,18 +993,10 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
           // nothing: drop any covered files metadata-only and leave
           // the boundary files untouched.
           if (dropped.isEmpty) DeleteReport(0, 0, m.files.size, 0L)
-          else {
-            Sidecar.write(conf, dir, m.copy(files =
-              (kept ++ partial).sortBy(f => (f.min, f.id))))
-            retire(dropped)
-            cleanOrphans(fs)
-            DeleteReport(dropped.size, 0, kept.size + partial.size,
-              dropped.map(_.rows).sum)
-          }
+          else dropCovered(kept ++ partial)
         } else {
-          val tgt =
-            target.getOrElse(NRows(math.max(1L, partial.map(_.rows).max)))
-          val opts = WriteOpts(m.orderedOn, tgt,
+          val opts = WriteOpts(m.orderedOn,
+            NRows(math.max(1L, partial.map(_.rows).max)),
             colStats = m.files.exists(_.cols.nonEmpty))
           val rep = materialize(d, survivors, partial ++ dropped, kept,
             Some(m), opts, m.orderedType, hasProvenance = false)
@@ -1230,17 +1207,17 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     } finally cached.unpersist()
   }
 
+  /** Test seam (OptimisticWriteSpec): runs after an optimistic prepare
+    * completes, before its commit gate — the window where a competing
+    * commit can land. No-op in production. */
+  private[store] var beforeOptimisticCommit: () => Unit = () => ()
+
   /** The commit critical section: a no-op wrapper on the locked path
     * (the caller already holds the lock); on the optimistic path,
     * take the lock briefly — queueing up to [[OrderedDataset.CommitWaitMs]],
     * since the section is milliseconds — and validate that the
     * generation the plan was built against is still the live one.
     */
-  /** Test seam (OptimisticWriteSpec): runs after an optimistic prepare
-    * completes, before its commit gate — the window where a competing
-    * commit can land. No-op in production. */
-  private[store] var beforeOptimisticCommit: () => Unit = () => ()
-
   private def commitSection[T](optimistic: Boolean,
       expected: Option[Long])(body: => T): T =
     if (!optimistic) body
@@ -1252,11 +1229,6 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
       body
     }
 
-  /** Shared execution tail of upsert and compaction: size into range
-    * partitions, write one file per partition to a tmp dir, collect
-    * stats, then commit (move files in, swap sidecar atomically, delete
-    * the replaced files).
-    */
   /** Stamp replaced files' mtime as their retirement time; they stay
     * readable until `retireGraceMs` passes (see cleanOrphans).
     */
@@ -1267,6 +1239,11 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
       catch { case _: java.io.FileNotFoundException => () }
     }
 
+  /** Shared execution tail of upsert and compaction: size into range
+    * partitions, write one file per partition to a tmp dir, collect
+    * stats, then commit (move files in, swap sidecar atomically, delete
+    * the replaced files).
+    */
   private def materialize(data: DataFrame, totalIn: Long,
       rewrite: Seq[FileStat], kept: Seq[FileStat],
       m0: Option[DatasetMeta], opts: WriteOpts, ordType: String,
@@ -1287,10 +1264,10 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     // LATER dedup-merge uses for equal-key ties among existing rows —
     // clustering makes that order the clustered one, still
     // deterministic.
+    val kv0 = m0.fold(Map.empty[String, String])(_.kv)
     val effClusterCols =
       (if (opts.clusterBy.nonEmpty) opts.clusterBy
-       else m0.flatMap(_.kv.get(OrderedDataset.ClusterColsKey))
-         .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil))
+       else OrderedDataset.stickyCols(kv0, OrderedDataset.ClusterColsKey))
         .filter(data.columns.contains)
     val layout = effClusterCols.map(col) ++ tieCols
     val sized = opts.target match {
@@ -1348,8 +1325,7 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     // silently loses its point-lookup skipping
     val effBloomCols =
       if (opts.bloomFilterCols.nonEmpty) opts.bloomFilterCols
-      else m0.flatMap(_.kv.get(OrderedDataset.BloomColsKey))
-        .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
+      else OrderedDataset.stickyCols(kv0, OrderedDataset.BloomColsKey)
     val writer0 = (if (hasProvenance) sized.drop(SeqCol, RidCol) else sized)
       .write.mode("overwrite")
     effBloomCols
@@ -1396,8 +1372,7 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     // approxDistinct with zero data IO
     val effSketchCols =
       (if (opts.sketchCols.nonEmpty) opts.sketchCols
-       else m0.flatMap(_.kv.get(OrderedDataset.SketchColsKey))
-         .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil))
+       else OrderedDataset.stickyCols(kv0, OrderedDataset.SketchColsKey))
         .filter(c => readBack.schema.fields.exists(f => f.name == c &&
           (f.dataType match {
             case IntegerType | LongType | StringType | BinaryType => true
@@ -1429,18 +1404,8 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
         else Some(f.name -> ColStat(mn, mx))
       }.toMap
     def hllOf(r: org.apache.spark.sql.Row): Map[String, String] =
-      effSketchCols.map { c =>
-        val i = r.fieldIndex(s"hll_$c")
-        // a file whose column is entirely null sketches as EMPTY (0
-        // distinct), not absent — absence means "written before
-        // sketching was enabled" and poisons the dataset-wide merge
-        val bytes =
-          if (r.isNullAt(i))
-            new org.apache.datasketches.hll.HllSketch(
-              OrderedDataset.HllLgK).toCompactByteArray
-          else r.getAs[Array[Byte]](i)
-        c -> java.util.Base64.getEncoder.encodeToString(bytes)
-      }.toMap
+      effSketchCols.map(c =>
+        c -> OrderedDataset.hllBase64(r, s"hll_$c")).toMap
     val written = readBack
       .groupBy(regexp_extract(input_file_name(), "[^/]+$", 0).as("f"))
       .agg(baseAggs.head, baseAggs.tail: _*)
@@ -1525,8 +1490,8 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     * size. No-op for an already-compacted dataset. Each run is one
     * bounded Spark job touching only that run's files; the rest of the
     * dataset is never read.
-    */
-  /** `lo`/`hiExcl` restrict compaction to files overlapping that range
+    *
+    * `lo`/`hiExcl` restrict compaction to files overlapping that range
     * of the ordered column (Delta's `OPTIMIZE … WHERE` analog): a
     * steadily-appended dataset compacts its hot tail without the
     * planner even considering the cold head's files. Scoped files are
@@ -1544,9 +1509,8 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     // rewrite when the caller asks for a NEW cluster layout (sticky
     // columns flow through kv; passing the current ones again is a
     // no-op unless sizes are off-target)
-    val wantCluster = clusterBy.filterNot(c =>
-      m.kv.get(OrderedDataset.ClusterColsKey)
-        .exists(_.split(",").toSeq.contains(c)))
+    val wantCluster = clusterBy.filterNot(OrderedDataset
+      .stickyCols(m.kv, OrderedDataset.ClusterColsKey).contains)
     // contiguous runs of files to rewrite, in stats order, tracked by
     // file identity (positions shift as each run is rewritten)
     val runs = target match {
@@ -1770,6 +1734,27 @@ object OrderedDataset {
     * Spark `hll_sketch_agg` default. One constant everywhere so any
     * two sketches in any sidecar are union-compatible. */
   val HllLgK = 12
+
+  /** The sticky layout columns recorded under `key` in a dataset's kv
+    * (comma-joined; absent = none). */
+  private[store] def stickyCols(kv: Map[String, String], key: String)
+      : Seq[String] =
+    kv.get(key).map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
+
+  /** Base64 of the per-file HLL sketch collected in `r`'s `field`. A
+    * file whose column is entirely null sketches as EMPTY (0 distinct),
+    * not absent — absence means "written before sketching was enabled"
+    * and poisons the dataset-wide merge. */
+  private[store] def hllBase64(r: org.apache.spark.sql.Row, field: String)
+      : String = {
+    val i = r.fieldIndex(field)
+    val bytes =
+      if (r.isNullAt(i))
+        new org.apache.datasketches.hll.HllSketch(HllLgK).toCompactByteArray
+      else r.getAs[Array[Byte]](i)
+    java.util.Base64.getEncoder.encodeToString(bytes)
+  }
+
   val LockStaleMs = 120000L
   val LockRefreshMs = 15000L
   /** Poll interval while queueing on a held lock. */
@@ -1783,12 +1768,6 @@ object OrderedDataset {
     * sidecar swap after the Spark job finishes). Library-level knob.
     */
   @volatile var lockWaitMs: Long = 0L
-
-  /** Telemetry: total optimistic commit conflicts in this JVM (lost
-    * races whose prepared output was discarded and re-planned) — the
-    * wasted-prepare counter the contention-economics bench
-    * ([[graft.OptimisticEconBench]]) reads. */
-  val optimisticConflicts = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Queue floor for the optimistic commit gate's brief lock hold
     * (renames + sidecar swap — milliseconds): unlike a full write,

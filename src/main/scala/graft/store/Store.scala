@@ -217,8 +217,7 @@ final class Store[K](val spark: SparkSession, val basepath: String,
     * caller never inherits an undocumented half-sharded corpus.
     */
   def shardedWrite(df: DataFrame, opts: WriteOpts, keyOf: Int => K,
-      targetRowsPerShard: Long,
-      quantileAccuracy: Int = 10000): Seq[K] = {
+      targetRowsPerShard: Long): Seq[K] = {
     import org.apache.spark.sql.functions.{array, col, count, lit,
       percentile_approx}
     require(targetRowsPerShard > 0,
@@ -243,7 +242,8 @@ final class Store[K](val spark: SparkSession, val basepath: String,
       else {
         val probs = (1 until nShards).map(_.toDouble / nShards)
         df.select(percentile_approx(col(ordCol),
-            array(probs.map(lit(_)): _*), lit(quantileAccuracy)).as("q"))
+            array(probs.map(lit(_)): _*),
+            lit(Store.ShardQuantileAccuracy)).as("q"))
           .head().getSeq[Any](0).distinct
       }
     val ranges: Seq[(Option[Any], Option[Any])] =
@@ -712,13 +712,6 @@ final class Store[K](val spark: SparkSession, val basepath: String,
     }.reduce(_ unionByName _)
   }
 
-  /** Synchronized range scan across datasets sharing the ordered column
-    * (ref store.py:303-326, iter_intersections.py:66-302). Boundaries
-    * are the union of per-file min values from the sidecars — driver-side
-    * metadata work; each yielded slice is a zone-map-pruned lazy
-    * DataFrame, so only the row groups overlapping the interval are read
-    * when a slice is consumed.
-    */
   /** Set-oriented form of the synchronized range scan (SURVEY §2.5
     * option A): ONE zone-map-pruned read per key tagged with the key
     * name — the same rows the zipper yields, in a 2-branch plan instead
@@ -736,6 +729,13 @@ final class Store[K](val spark: SparkSession, val basepath: String,
     }.reduce(_ unionByName _)
   }
 
+  /** Synchronized range scan across datasets sharing the ordered column
+    * (ref store.py:303-326, iter_intersections.py:66-302). Boundaries
+    * are the union of per-file min values from the sidecars — driver-side
+    * metadata work; each yielded slice is a zone-map-pruned lazy
+    * DataFrame, so only the row groups overlapping the interval are read
+    * when a slice is consumed.
+    */
   def iterIntersections(ks: Seq[K], start: Option[OrdVal] = None,
       endExcl: Option[OrdVal] = None): Iterator[Intersection[K]] = {
     require(ks.nonEmpty, "no keys")
@@ -798,4 +798,8 @@ object Store {
     * as a planned move.
     */
   val ShardPressureWarnAt = 0.8
+
+  /** `percentile_approx` accuracy of [[Store.shardedWrite]]'s shard
+    * boundaries (Spark's own default). */
+  private[store] val ShardQuantileAccuracy = 10000
 }

@@ -22,6 +22,14 @@ import graft.store.{NRows, OrderedDataset, RowGroupTarget, WriteOpts}
   */
 object StreamingAgg {
 
+  /** Watermark delay of both queries: "0 seconds" encodes the
+    * reference's ordered-seed contract (AggStream raises on an
+    * unordered seed). Convergence to the one-shot batch result holds
+    * only while chunks arrive in non-decreasing event time (equal
+    * boundary timestamps across chunks are safe — Spark drops
+    * strictly-older-than-watermark rows only). */
+  private val OrderedSeedWatermark = "0 seconds"
+
   /** Aggregate a streaming DataFrame into a store-backed result dataset.
     *
     * @param seed streaming DataFrame (readStream source)
@@ -31,27 +39,16 @@ object StreamingAgg {
     * @param specs the five-kernel agg plan
     * @param targetDir OrderedDataset directory for results
     * @param checkpointDir streaming checkpoint location
-    * @param watermarkDelay how far out of event-time order the source
-    *   may run before rows are DROPPED by the watermark. The default
-    *   "0 seconds" encodes the reference's ordered-seed contract
-    *   (AggStream raises on an unordered seed): convergence to the
-    *   one-shot batch result holds only while chunks arrive in
-    *   non-decreasing event time (equal boundary timestamps across
-    *   chunks are safe — Spark drops strictly-older-than-watermark
-    *   rows only). For genuinely out-of-order sources, size this to
-    *   the disorder bound; the keep-last bin upsert absorbs the
-    *   re-emitted bins either way.
     */
   def run(seed: DataFrame, orderedOn: String, tieCol: String, freq: String,
       specs: Seq[AggSpec], targetDir: String, checkpointDir: String,
-      target: RowGroupTarget = NRows(6345000L),
-      watermarkDelay: String = "0 seconds"): StreamingQuery = {
+      target: RowGroupTarget = NRows(6345000L)): StreamingQuery = {
     val spark = seed.sparkSession
     val aggExprs = SegmentAgg.partialAggExprs(specs, col(tieCol))
     // groupBy the window struct itself (watermark propagation requires
     // it); project the start label after the aggregate
     val agg = seed
-      .withWatermark(orderedOn, watermarkDelay)
+      .withWatermark(orderedOn, OrderedSeedWatermark)
       .groupBy(window(col(orderedOn), freq).as("w"))
       .agg(aggExprs.head, aggExprs.tail: _*)
       .select(col("w").getField("start").as("bin") +:
@@ -99,13 +96,11 @@ object StreamingAgg {
   def runSnapshots(seed: DataFrame, orderedOn: String, tieCol: String,
       binFreq: String, snapFreq: String, specs: Seq[AggSpec],
       targetDir: String, checkpointDir: String,
-      target: RowGroupTarget = NRows(6345000L),
-      watermarkDelay: String = "0 seconds"): StreamingQuery = {
+      target: RowGroupTarget = NRows(6345000L)): StreamingQuery = {
     val spark = seed.sparkSession
     val partials = graft.agg.SegmentAgg.partialAggExprs(specs, col(tieCol))
-    // watermarkDelay: see run() — "0 seconds" = ordered-seed contract
     val agg = seed
-      .withWatermark(orderedOn, watermarkDelay)
+      .withWatermark(orderedOn, OrderedSeedWatermark)
       .groupBy(window(col(orderedOn), snapFreq).as("w"),
         graft.agg.SegmentAgg.timeBin(col(orderedOn), binFreq).as("bin"))
       .agg(partials.head, partials.tail: _*)

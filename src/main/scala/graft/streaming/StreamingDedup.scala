@@ -96,8 +96,8 @@ object StreamingDedup {
     * increment without replaying would let a later same-digest doc
     * slip past the not-yet-extended index and replace the stored
     * original.
-    */
-  /** With `contamIndexDir` set, each batch is ALSO decontaminated
+    *
+    * With `contamIndexDir` set, each batch is ALSO decontaminated
     * in-stream: documents sharing any word `contamN`-gram with the
     * persisted eval index ([[graft.pipeline.ContaminationOps
     * .buildIndex]]) are rejected before the corpus commit — the probe
@@ -105,8 +105,8 @@ object StreamingDedup {
     * caught at the door instead of by a later corpus-wide sweep.
     * Rejection is deterministic in content, so batch replay stays
     * idempotent.
-    */
-  /** With `segIndexDir` set, accepted documents are additionally
+    *
+    * With `segIndexDir` set, accepted documents are additionally
     * BOILERPLATE-STRIPPED in-stream: segments whose document frequency
     * across the accepted corpus (plus this batch) reaches `segDfMin`
     * are removed before the corpus commit, and the persisted
@@ -116,8 +116,8 @@ object StreamingDedup {
     * replay whose strip verdict differs (the index advanced in
     * between) still collapses onto the same row, keep-last picking the
     * later rewrite.
-    */
-  /** With `blockIndexDir` set, each batch is ALSO screened against a
+    *
+    * With `blockIndexDir` set, each batch is ALSO screened against a
     * persisted BLOCKLIST — a digest index
     * ([[DedupIndex.buildDigest]]) over recalled/banned content. This
     * is the ingest-side twin of [[DedupIndex.removeDocs]]: a takedown

@@ -189,11 +189,18 @@ object StreamingXRows {
     }
   }
 
-  private def boundedArray[T](it: Iterator[T], maxBatchRows: Int)
+  /** The group function sorts each micro-batch in ONE task's memory;
+    * [[boundedArray]] fails fast with the remedies named instead of a
+    * silent executor OOM when a source hands over an oversized batch
+    * (e.g. a giant graft commit — rate-limit with
+    * max_generations_per_trigger, or commit smaller increments). */
+  private val MaxBatchRows = 20000000
+
+  private def boundedArray[T](it: Iterator[T])
       (implicit ct: scala.reflect.ClassTag[T]): Array[T] = {
-    val rows = it.take(maxBatchRows + 1).toArray
-    require(rows.length <= maxBatchRows,
-      s"micro-batch exceeds maxBatchRows=$maxBatchRows for the " +
+    val rows = it.take(MaxBatchRows + 1).toArray
+    require(rows.length <= MaxBatchRows,
+      s"micro-batch exceeds MaxBatchRows=$MaxBatchRows for the " +
         "in-memory count-bin sort — rate-limit the source " +
         "(max_generations_per_trigger) or commit smaller increments")
     rows
@@ -202,19 +209,11 @@ object StreamingXRows {
   def run(seed: DataFrame, orderedOn: String, tieCol: String,
       valueCol: String, xRows: Long, targetDir: String,
       checkpointDir: String, target: RowGroupTarget = NRows(6345000L),
-      /** The group function sorts each micro-batch in ONE task's
-        * memory; this fails fast with the remedies named instead of a
-        * silent executor OOM when a source hands over an oversized
-        * batch (e.g. a giant graft commit — rate-limit with
-        * max_generations_per_trigger, or commit smaller increments). */
-      maxBatchRows: Int = 20000000,
       strictOrder: Boolean = true,
       /** Override ONLY to simulate/stage a version bump (specs, or a
         * deliberate migration); production callers take the default. */
       stateVersion: Int = StateVersion): StreamingQuery = {
     require(xRows > 0, s"xRows must be positive, got $xRows")
-    require(maxBatchRows > 0,
-      s"maxBatchRows must be positive, got $maxBatchRows")
     val spark = seed.sparkSession
     import spark.implicits._
     val typed = seed.select(
@@ -229,7 +228,7 @@ object StreamingXRows {
     val out = typed.groupByKey(_ => 0)
       .flatMapGroupsWithState[XState, XOut](OutputMode.Update,
         GroupStateTimeout.NoTimeout) { (_, it, state) =>
-        foldBatch("global", boundedArray(it, maxBatchRows), state,
+        foldBatch("global", boundedArray(it), state,
           xRows, strictOrder, stateVersion)
       }
 
@@ -266,13 +265,9 @@ object StreamingXRows {
     */
   def runKeyed(seed: DataFrame, keyCol: String, orderedOn: String,
       tieCol: String, valueCol: String, xRows: Long, targetDir: String,
-      checkpointDir: String, target: RowGroupTarget = NRows(6345000L),
-      maxBatchRows: Int = 20000000,
-      strictOrder: Boolean = true,
-      stateVersion: Int = StateVersion): StreamingQuery = {
+      checkpointDir: String, target: RowGroupTarget = NRows(6345000L))
+      : StreamingQuery = {
     require(xRows > 0, s"xRows must be positive, got $xRows")
-    require(maxBatchRows > 0,
-      s"maxBatchRows must be positive, got $maxBatchRows")
     val spark = seed.sparkSession
     import spark.implicits._
     val typed = seed.select(
@@ -284,10 +279,9 @@ object StreamingXRows {
     val out = typed.groupByKey(_.key)
       .flatMapGroupsWithState[XState, KXOut](OutputMode.Update,
         GroupStateTimeout.NoTimeout) { (key, it, state) =>
-        val rows = boundedArray(
-          it.map(r => XIn(r.tie, r.tsMicros, r.value)), maxBatchRows)
-        foldBatch(s"key=$key", rows, state, xRows, strictOrder,
-          stateVersion)
+        val rows = boundedArray(it.map(r => XIn(r.tie, r.tsMicros, r.value)))
+        foldBatch(s"key=$key", rows, state, xRows, strictOrder = true,
+          StateVersion)
           .map(o => KXOut(key, o.bin, o.label_micros, o.n_rows,
             o.first_v, o.last_v, o.min_v, o.max_v, o.sum_str))
       }

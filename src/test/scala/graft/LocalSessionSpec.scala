@@ -28,6 +28,22 @@ class LocalSessionSpec extends AnyFunSuite {
       s"session builders outside LocalSession: ${hits.mkString(", ")}")
   }
 
+  test("src/main's entry points are exactly the five kept mains") {
+    // one-off experiments belong in a spec or in git history (SCALE.md
+    // "Retired experiment mains"), not in the engine jar
+    val objectRe = "(?m)^object (\\w+)".r
+    val mainRe = "(?m)^\\s+def main\\(".r
+    val mains = sources.flatMap { case (_, s) =>
+      mainRe.findAllMatchIn(s).map { m =>
+        objectRe.findAllMatchIn(s.substring(0, m.start)).toSeq
+          .lastOption.map(_.group(1)).getOrElse("?")
+      }
+    }
+    assert(mains.sorted ==
+      Seq("Bench", "Explain", "PhaseProbe", "ScaleData", "Verify"),
+      s"entry points: ${mains.sorted.mkString(", ")}")
+  }
+
   test("no src/main file hard-codes a local[<digits>] master") {
     // string literals only: prose may still name local[32] vs local[4]
     val literal = "\"local\\[\\d+\\]".r

@@ -104,6 +104,32 @@ class StoreSpec extends SparkSpec {
     assert(scanned < 4, s"expected pruning, scanned $scanned files")
   }
 
+  test("sliceDF reads exactly the files at those min-order positions") {
+    val dir = tmpDir("opd")
+    val ds = new OrderedDataset(spark, s"$dir/d1")
+    ds.write(tsDf((1L to 100L).map(i => (i, i * 1.0))),
+      WriteOpts("t", target = NRows(30)))
+    val files = ds.meta.files
+    assert(files.size == 4)
+    def check(from: Int, untilExcl: Int): Unit = {
+      val sel = files.slice(from, untilExcl)
+      val s = ds.sliceDF(from, untilExcl)
+      assert(s.columns.toSeq == Seq("t", "v"))
+      val got = s.select("t").as[Long].collect().sorted.toSeq
+      val want = (1L to 100L).filter(t =>
+        sel.exists(f => OrdLong(t) >= f.min && OrdLong(t) <= f.max))
+      assert(got == want, s"slice($from, $untilExcl)")
+      assert(got.size.toLong == sel.map(_.rows).sum)
+      assert(s.select(input_file_name()).distinct().as[String].collect()
+        .map(_.split("/").last).toSet == sel.map(_.name).toSet)
+    }
+    check(1, 3)  // interior: the 2nd and 3rd files by min
+    check(0, 1)  // head file only
+    check(2, 2)  // empty slice
+    check(3, 10) // runs past the end: the last file only
+    check(5, 7)  // entirely past the end: empty
+  }
+
   test("append beyond tail rewrites nothing") {
     val dir = tmpDir("opd")
     val ds = new OrderedDataset(spark, s"$dir/d1")
