@@ -55,6 +55,10 @@ object Bpe {
     * 50k merges). */
   val MaxMerges = 1000000
 
+  /** Vocabulary cap of [[train]]: the most frequent words it keeps on
+    * the driver. */
+  val TrainMaxWords = 1000000
+
   /** Oracle-replay wrapper metacharacters (ADVICE r11): control chars
     * U+0001/U+0002 that no real corpus text contains, so literal
     * `<`/`>` in documents (e.g. the cleaner's `<URL>` scrub markers)
@@ -120,6 +124,10 @@ object Bpe {
   }
 
   object Table {
+    /** Columns [[fromDataFrame]] reads: the merges line and its rank. */
+    val LineCol = "line"
+    val RankCol = "rank"
+
     def fromPairs(merges: Seq[(String, String)]): Table = new Table(merges)
 
     /** GPT-2 `merges.txt` line format: `a b` per line, rank = line
@@ -132,17 +140,16 @@ object Bpe {
           (l.substring(0, sp), l.substring(sp + 1))
         })
 
-    /** Load from a one-string-column DataFrame of merges lines (rank =
-      * `rank` column order). The collect is the bounded
-      * vocabulary-sized driver read every tokenizer needs — the same
-      * class as the IVF-PQ codebook collect. */
-    def fromDataFrame(df: org.apache.spark.sql.DataFrame,
-        lineCol: String = "line", rankCol: String = "rank"): Table = {
+    /** Load from a DataFrame of merges lines: the [[LineCol]] string
+      * column, ranked by the [[RankCol]] column. The collect is the
+      * bounded vocabulary-sized driver read every tokenizer needs — the
+      * same class as the IVF-PQ codebook collect. */
+    def fromDataFrame(df: org.apache.spark.sql.DataFrame): Table = {
       import org.apache.spark.sql.functions.col
       val n = df.count()
       require(n <= MaxMerges,
         s"merges table has $n rows (cap $MaxMerges)")
-      fromLines(df.orderBy(col(rankCol)).select(col(lineCol))
+      fromLines(df.orderBy(col(RankCol)).select(col(LineCol))
         .collect().map(_.getString(0)).toSeq)
     }
   }
@@ -288,9 +295,8 @@ object Bpe {
     * the object doc for why that equals the greedy loop on a
     * well-formed table). Token count = number of `<` wrappers left.
     */
-  def duckdbCountExpr(wordExpr: String,
-      merges: Seq[(String, String)] = FixtureMerges): String = {
-    val chain = merges.foldLeft(
+  def duckdbCountExpr(wordExpr: String): String = {
+    val chain = FixtureMerges.foldLeft(
       s"regexp_replace($wordExpr, '(.)', '$WrapL\\1$WrapR', 'g')") {
       case (acc, (a, b)) =>
         s"replace($acc, '$WrapL$a$WrapR$WrapL$b$WrapR', '$WrapL$a$b$WrapR')"
@@ -300,10 +306,9 @@ object Bpe {
 
   /** DuckDB expression: total BPE token count of a text column
     * (space-split words, per-word chain, summed). */
-  def duckdbTextCountExpr(textExpr: String,
-      merges: Seq[(String, String)] = FixtureMerges): String =
+  def duckdbTextCountExpr(textExpr: String): String =
     s"CAST(list_sum(list_transform(string_split($textExpr, ' '), " +
-      s"bpew -> ${duckdbCountExpr("bpew", merges)})) AS BIGINT)"
+      s"bpew -> ${duckdbCountExpr("bpew")})) AS BIGINT)"
 
   /** DuckDB expression: the BPE token sequence of a text column as a
     * '|'-joined string (per-word chains unwrapped to tokens, empty
@@ -316,9 +321,8 @@ object Bpe {
     * `|`: text carrying a literal `|` or the control chars would still
     * corrupt the chain and must be remapped identically on both sides.
     * [[BpeEncode]] itself handles any characters. */
-  def duckdbTokensExpr(textExpr: String,
-      merges: Seq[(String, String)] = FixtureMerges): String = {
-    val chain = merges.foldLeft(
+  def duckdbTokensExpr(textExpr: String): String = {
+    val chain = FixtureMerges.foldLeft(
       s"regexp_replace(bpew, '(.)', '$WrapL\\1$WrapR', 'g')") {
       case (acc, (a, b)) =>
         s"replace($acc, '$WrapL$a$WrapR$WrapL$b$WrapR', '$WrapL$a$b$WrapR')"
@@ -360,29 +364,27 @@ object Bpe {
     * byte-level BPE tokenizers are built) trains on the WORD-FREQUENCY
     * table, not the raw text: one distributed `groupBy(word).count()`
     * collapses the 100 TB corpus to its vocabulary, the driver keeps
-    * the `maxWords` most frequent (the capped, bounded collect — same
-    * class as the PQ codebook), and the merge loop runs driver-side
-    * over that weighted table (each iteration counts adjacent-pair
-    * frequencies and merges the argmax — hashmap work over ≤maxWords
-    * entries, no further Spark jobs). Deterministic: ties break on
-    * the lexicographically smallest pair, so the same corpus always
-    * yields the same table. The result is well-formed BY CONSTRUCTION
+    * the [[TrainMaxWords]] most frequent (the capped, bounded collect
+    * — same class as the PQ codebook), and the merge loop runs
+    * driver-side over that weighted table (each iteration counts
+    * adjacent-pair frequencies and merges the argmax — hashmap work
+    * over ≤ TrainMaxWords entries, no further Spark jobs).
+    * Deterministic: ties break on the lexicographically smallest pair,
+    * so the same corpus always yields the same table. The result is well-formed BY CONSTRUCTION
     * (every merge's sides exist when it fires), so the trained table
     * immediately satisfies the oracle-equivalence contract.
     */
   def train(df: org.apache.spark.sql.DataFrame, textCol: String,
-      nMerges: Int, maxWords: Int = 1000000): Table = {
+      nMerges: Int): Table = {
     import org.apache.spark.sql.functions._
     require(nMerges >= 1, s"nMerges must be >= 1: $nMerges")
-    require(maxWords >= 1 && maxWords <= 10000000,
-      s"maxWords must be in [1, 10M]: $maxWords")
     val freq: Array[(String, Long)] =
       df.select(explode(split(col(textCol), " ")).as("w"))
         .filter(length(col("w")) >= 2 &&
           !col("w").contains(WrapL) && !col("w").contains(WrapR))
         .groupBy("w").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("w"))
-        .limit(maxWords)
+        .limit(TrainMaxWords)
         .collect().map(r => (r.getString(0), r.getLong(1)))
     // driver-side merge loop over the weighted vocabulary
     var words: Array[(Array[String], Long)] =

@@ -165,10 +165,6 @@ case class PqDots(child: Expression, codebook: Seq[Seq[Seq[Double]]])
 }
 
 object PqDots {
-  /** Spark `Round(_, 6)` on DoubleType, verbatim: NaN/Infinity pass
-    * through, else decimal-text BigDecimal + HALF_UP. Public because
-    * the generated code calls it.
-    */
   /** Loud error for a vector whose length doesn't match the codebook
     * dim — a configuration bug, never dirty data. Public because the
     * generated code calls it.
@@ -180,6 +176,10 @@ object PqDots {
         s"expects dim=$dim (m=$m subspaces x ds=$ds) — rebuild the " +
         "codebook for this corpus or fix the embedding column")
 
+  /** Spark `Round(_, 6)` on DoubleType, verbatim: NaN/Infinity pass
+    * through, else decimal-text BigDecimal + HALF_UP. Public because
+    * the generated code calls it.
+    */
   def round6(d: Double): Double =
     if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) d
     else java.math.BigDecimal.valueOf(d)

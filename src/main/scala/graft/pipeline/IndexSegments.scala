@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.GraftFileIndex
 import graft.store.{DatasetMeta, OrdLong, OrderedDataset, Sidecar, WriteOpts}
 
 /** LSM-style DELTA SEGMENTS for the store-backed index family
@@ -411,22 +412,10 @@ object IndexSegments {
     * under-cap tier. */
   private def pointScans(parts: Seq[Part], keyArr: Array[Long],
       filesTotal: Int): Seq[DataFrame] = {
-    val pts = keyArr.distinct.sorted.map(OrdLong(_)).toSeq
-    // stats: binary-search the sorted point set per file (O(F log
-    // K) — cheap next to the selection multiPointDFOf itself does)
-    val arr = pts.toArray
-    def anyIn(mn: graft.store.OrdVal, mx: graft.store.OrdVal)
-        : Boolean = {
-      var a = 0; var b = arr.length - 1; var res = -1
-      while (a <= b) {
-        val m = (a + b) >>> 1
-        if (arr(m) >= mn) { res = m; b = m - 1 } else a = m + 1
-      }
-      res >= 0 && arr(res) <= mx
-    }
-    val opened = parts.map(
-      _.m.files.count(f => anyIn(f.min, f.max))).sum
-    lastProbeStats.set(ProbeStats("driver_points", filesTotal, opened))
+    val pts = keyArr.distinct.map(OrdLong(_)).toSeq
+    val sel = parts.map(p => GraftFileIndex.covering(p.m.files, pts))
+    lastProbeStats.set(
+      ProbeStats("driver_points", filesTotal, sel.map(_.size).sum))
     // point-membership residual ON THE SCAN (r13): the caller's
     // equi-join drops non-probe keys anyway, but filtering them at
     // the parquet scan pushes down (row-group stats / dictionary)
@@ -435,8 +424,8 @@ object IndexSegments {
     // literal list never bloats the plan; above the bound the
     // zone-map file selection alone is kept (old behavior).
     val residual = pts.size <= IsinResidualMax
-    parts.map { p =>
-      val d = p.ds.multiPointDFOf(p.m, pts)
+    parts.zip(sel).map { case (p, files) =>
+      val d = p.ds.filesDFOf(p.m, files)
       if (residual)
         d.where(col(p.m.orderedOn).isin(pts.map(_.v): _*))
       else d
@@ -634,11 +623,9 @@ object IndexSegments {
         s"keys exceed the driver cap — zone-map file-pruning tier " +
         s"opened ${hit.size}/$filesTotal files into the equi-join")
     parts.zipWithIndex.map { case (p, pi) =>
-      val names = p.m.files.zipWithIndex.collect {
-        case (f, fi) if hit.contains((pi.toLong << 32) | fi.toLong) =>
-          f.name
-      }
-      p.ds.filesDFOf(p.m, names)
+      p.ds.filesDFOf(p.m, p.m.files.zipWithIndex.collect {
+        case (f, fi) if hit.contains((pi.toLong << 32) | fi.toLong) => f
+      })
     }
   }
 

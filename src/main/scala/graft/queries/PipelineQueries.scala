@@ -432,8 +432,6 @@ object PipelineQueries {
       dir
     }
 
-  /** Build the store-backed MinHash LSH band index over the full
-    * documents table (one row per doc × band). */
   /** The fuzzy-decontamination eval fixture: every %10==3 doc with
     * junk tokens appended under a fresh id — KNOWN leaks whose
     * Jaccard the mutation controls (long docs clear the 0.8 bar,
@@ -456,6 +454,8 @@ object PipelineQueries {
       dir
     }
 
+  /** Build the store-backed MinHash LSH band index over the full
+    * documents table (one row per doc × band). */
   private def ensureLshIndex(s: SparkSession, d: String): String =
     synchronized {
       val dir = s"/tmp/graft_lshband_${inputTag(d, "documents")}"
@@ -503,15 +503,6 @@ object PipelineQueries {
       dir
     }
 
-  /** Run the streaming-dedup ingest once per scale dir: the documents
-    * table staged as four stream files — three ascending id-range
-    * chunks ("crawl days"), then the FULL table again (a day-2
-    * re-crawl whose every digest the index probe must reject) — fed
-    * through [[graft.streaming.StreamingDedup]] one file per
-    * micro-batch. Ascending id chunks make arrival-order keep-first
-    * coincide with min-id-per-digest, which is what the SQL oracle
-    * states. Returns the corpus dataset dir.
-    */
   /** Stage the 4-chunk crawl shape (three ascending doc_id thirds + a
     * full re-crawl) as timestamp-ordered parquet files under
     * `base/stream_src` — shared by every streaming-ingest fixture.
@@ -545,6 +536,15 @@ object PipelineQueries {
     srcDir.toString
   }
 
+  /** Run the streaming-dedup ingest once per scale dir: the documents
+    * table staged as four stream files — three ascending id-range
+    * chunks ("crawl days"), then the FULL table again (a day-2
+    * re-crawl whose every digest the index probe must reject) — fed
+    * through [[graft.streaming.StreamingDedup]] one file per
+    * micro-batch. Ascending id chunks make arrival-order keep-first
+    * coincide with min-id-per-digest, which is what the SQL oracle
+    * states. Returns the corpus dataset dir.
+    */
   private def ensureStreamingDedup(s: SparkSession, d: String): String =
     synchronized {
       val base = s"/tmp/graft_sdedup_${inputTag(d, "documents")}"
@@ -2118,17 +2118,6 @@ object PipelineQueries {
      SELECT doc_id, md5(text) AS digest, w_sum FROM dd
      ORDER BY doc_id"""
 
-  /** The composed-pipeline oracle — the full chain restated in DuckDB:
-    * split → re-crawl duplicates → inject+clean → classifier gate →
-    * exact dedup (min-id per cleaned digest) → sign-LSH near-dup over
-    * survivor vectors (same plane literals as the Spark side, losers =
-    * the j of every verified pair) → 5-gram decontamination vs the
-    * held-out eval split → per-shard token-budget prefix. Like
-    * [[embeddingLshOracle]], the banded self-join form is exact
-    * wherever the grouped form's chunk cap has slack — survivor
-    * buckets are a subset of the full-corpus buckets, which sit far
-    * under DefaultChunkRows at every driver SF.
-    */
   /** The composed-pipeline oracle CTE chain through `cum` (the budget
     * coordinates), shared by pipelineE2eOracle and
     * pipelineShardsOracle — the SQL twin of [[pipelineBudgeted]];
@@ -2200,6 +2189,17 @@ object PipelineQueries {
                AS BIGINT) AS cum_tokens FROM t)"""
   }
 
+  /** The composed-pipeline oracle — the full chain restated in DuckDB:
+    * split → re-crawl duplicates → inject+clean → classifier gate →
+    * exact dedup (min-id per cleaned digest) → sign-LSH near-dup over
+    * survivor vectors (same plane literals as the Spark side, losers =
+    * the j of every verified pair) → 5-gram decontamination vs the
+    * held-out eval split → per-shard token-budget prefix. Like
+    * [[embeddingLshOracle]], the banded self-join form is exact
+    * wherever the grouped form's chunk cap has slack — survivor
+    * buckets are a subset of the full-corpus buckets, which sit far
+    * under DefaultChunkRows at every driver SF.
+    */
   private def pipelineE2eOracle: String =
     s"""WITH $pipelineE2eCtes
      SELECT doc_id, shard, n_tokens, cum_tokens FROM cum
@@ -2487,13 +2487,13 @@ object PipelineQueries {
     * kept NULL explicitly or it contributes a phantom k to the span
     * sum (the Spark side never sees it: its deltas array has n−1
     * entries, no null row).
-    */
-  /** `where` restricts the output docs (the incremental variant is
+    *
+    * `where` restricts the output docs (the incremental variant is
     * the same corpus-wide computation emitted for the batch split
-    * only). */
-  /** `universeWhere` restricts the CORPUS the occurrence counts are
-    * computed over (the takedown variant: the removed docs were never
-    * in the oracle's universe). */
+    * only). `universeWhere` restricts the CORPUS the occurrence counts
+    * are computed over (the takedown variant: the removed docs were
+    * never in the oracle's universe).
+    */
   private def spanDedupOracle(where: String = "",
       universeWhere: String = ""): String = {
     s"""WITH $spanInjCte,

@@ -5,121 +5,84 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graftbridge.SparkInternals.asNullable
 import org.apache.spark.sql.types._
 import graft.store.{DatasetMeta, FileStat, OrdDouble, OrdLong, OrdTs, OrdVal, Sidecar}
 
 /** Catalyst [[FileIndex]] over an ordered dataset's `_graftmd.json`
-  * zone-map sidecar: Spark's file-source planner calls `listFiles`
-  * with the query's data filters, and files whose [min, max] stats
-  * cannot satisfy the predicates on `ordered_on` are skipped WITHOUT
-  * any parquet footer IO (the same driver-side planning as
-  * `OrderedDataset.rangeDF`, ref iter_intersections.py:136-151 — but
-  * driven by arbitrary user predicates, including ones written in
-  * SQL against a `USING graft` view).
+  * zone-map sidecar — the one way a dataset's files become a
+  * DataFrame. `format("graft")` serves the live sidecar; every store
+  * read serves a PINNED index: a captured snapshot and the files
+  * selected from it ([[GraftFileIndex.pinned]]). Spark's file-source
+  * planner calls `listFiles` with the query's data filters, and files
+  * whose [min, max] stats cannot satisfy them are skipped WITHOUT any
+  * parquet footer IO (ref iter_intersections.py:136-151), SQL against
+  * a `USING graft` view included. Pruning is a pure optimization:
+  * Spark re-applies every data filter at the scan, so an expression
+  * this index does not understand simply prunes nothing.
   *
-  * Pruning is a pure optimization: Spark re-applies every data filter
-  * at the scan (parquet row-group pushdown + post-scan Filter), so an
-  * expression this index does not understand simply prunes nothing.
-  *
-  * 100 TB design: `listFiles` is O(#files) driver-side metadata work
-  * over the already-loaded sidecar; the one `listStatus` RPC per
-  * refresh is the same cost `spark.read.parquet(dir)` pays for its
-  * InMemoryFileIndex, and the snapshot is immutable thereafter, so a
-  * reader's plan cannot mix two store generations mid-query.
+  * 100 TB design: planning is O(#files) driver work over the loaded
+  * sidecar, and file lengths come from ONE `listStatus` of the
+  * directory on first use — where `spark.read.parquet(paths)` stats
+  * every path and, above 32 paths, runs a Spark listing job. The
+  * snapshot is immutable, so a plan cannot mix two store generations.
   */
 final class GraftFileIndex private (spark: SparkSession, val dir: String,
-    initial: Option[(DatasetMeta, Map[String, FileStatus])],
-    restrict: Option[Set[String]],
-    generation: Option[Long])
+    private val live: Boolean, init: GraftFileIndex.Snapshot,
+    schema: Option[StructType])
     extends FileIndex {
 
+  /** The live dataset: the current sidecar, re-read by [[refresh]]. */
   def this(spark: SparkSession, dir: String) =
-    this(spark, dir, None, None, None)
+    this(spark, dir, live = true, GraftFileIndex.liveSnapshot(spark, dir),
+      None)
 
-  /** Time-travel view: serve a RETAINED sidecar generation
-    * ([[graft.store.OrderedDataset.dfAsOf]] semantics) — readable as
-    * long as the replaced data files live out the reader grace window.
-    */
-  def this(spark: SparkSession, dir: String, generation: Long) =
-    this(spark, dir, None, None, Some(generation))
+  @volatile private var snap: GraftFileIndex.Snapshot = init
 
-  @volatile private var snapshot: (DatasetMeta, Map[String, FileStatus]) =
-    initial.getOrElse(load())
-
-  /** A view of this index serving ONLY the named files, sharing the
-    * snapshot (no extra FS RPC). Used by [[GraftStatsAgg]] to scan just
-    * the boundary files of a hybrid metadata+scan aggregate.
-    */
+  /** A pinned index over this one's snapshot serving ONLY the named
+    * files: [[GraftStatsAgg]]'s scan of a hybrid aggregate's boundary
+    * files. */
   def restricted(names: Set[String]): GraftFileIndex =
-    new GraftFileIndex(spark, dir, Some(snapshot), Some(names), generation)
+    GraftFileIndex.pinned(spark, dir, snap.captured,
+      meta.files.filter(f => names(f.name)), schema)
 
   /** Files selected by the last `listFiles` call (test/diagnostic). */
   @volatile var lastSelectedFiles: Int = -1
 
-  private def load(): (DatasetMeta, Map[String, FileStatus]) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val live0 = Sidecar.read(conf, dir)
-    val m = generation match {
-      case None => live0
-      case Some(g) if g == live0.generation => live0
-      case Some(g) =>
-        val vp = new HPath(dir, Sidecar.versionedName(g))
-        if (!vp.getFileSystem(conf).exists(vp))
-          throw new IllegalArgumentException(
-            s"generation $g of $dir is not retained (live is " +
-              s"${live0.generation})")
-        Sidecar.readPath(conf, vp)
-    }
-    val p = new HPath(dir)
-    val fs = p.getFileSystem(conf)
-    val live = m.files.map(_.name).toSet
-    val statuses = fs.listStatus(p).iterator
-      .filter(s => s.isFile && live.contains(s.getPath.getName))
-      .map(s => s.getPath.getName -> s).toMap
-    (m, statuses)
-  }
+  /** Sidecar meta, files cut to the ones this index serves (what the
+    * stats-agg rule and `listFiles` both plan against). */
+  def meta: DatasetMeta = snap.served
 
-  /** Sidecar meta, files filtered to the restriction (if any) — so the
-    * stats-agg rule and `listFiles` agree on what this index serves.
+  /** The schema the files are read through: the one the index was
+    * pinned with, else the sidecar's (no footer IO; why the sidecar's:
+    * `OrderedDataset.read`). Only pre-schema sidecars infer it from a
+    * footer (their files are schema-uniform by the old write check).
     */
-  def meta: DatasetMeta = {
-    val m = snapshot._1
-    restrict.fold(m)(r => m.copy(files = m.files.filter(f => r(f.name))))
-  }
-
-  /** Dataset schema served from the sidecar (no footer IO); falls back
-    * to a parquet schema read only for pre-schema sidecars.
-    */
-  def dataSchema: StructType =
-    if (meta.schemaJson.nonEmpty)
-      org.apache.spark.sql.graftbridge.SparkInternals.asNullable(
-        DataType.fromJson(meta.schemaJson).asInstanceOf[StructType])
-    else if (meta.files.isEmpty)
-      throw new IllegalArgumentException(
-        s"graft dataset at $dir is empty and carries no schema")
-    else spark.read.parquet(inputFiles.toIndexedSeq: _*).schema
+  def dataSchema: StructType = schema.getOrElse(snap.sidecarSchema)
 
   override def rootPaths: Seq[HPath] = Seq(new HPath(dir))
 
   override def partitionSchema: StructType = StructType(Nil)
 
-  override def refresh(): Unit = snapshot = load()
+  override def refresh(): Unit =
+    if (live) snap = GraftFileIndex.liveSnapshot(spark, dir)
 
   override def inputFiles: Array[String] =
     meta.files.map(f => s"$dir/${f.name}").toArray
 
   override def sizeInBytes: Long = {
-    val st = snapshot._2
+    val st = snap.statuses
     meta.files.iterator.flatMap(f => st.get(f.name)).map(_.getLen).sum
   }
 
   override def listFiles(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val statuses = snapshot._2
+    val statuses = snap.statuses
     val sel = GraftFileIndex.selectFiles(meta, dataFilters)
     lastSelectedFiles = sel.size
-    // a sidecar file absent from the directory snapshot must fail the
+    // a sidecar file absent from the directory listing must fail the
     // query, not silently shrink it (can only happen if a dataset's
     // retire-grace window elapsed under a long-lived index — refresh())
     val files = sel.map { f =>
@@ -131,9 +94,89 @@ final class GraftFileIndex private (spark: SparkSession, val dir: String,
     }
     Seq(PartitionDirectory(InternalRow.empty, files.toArray))
   }
+
+  /** Pinned indexes serving the same files of one generation through
+    * one schema are equal — as `spark.read.parquet`'s index compares
+    * by its paths — so `ds.df.cache()` serves a later `ds.df`. The
+    * live index, which [[refresh]] mutates, equals only itself.
+    */
+  override def equals(other: Any): Boolean = other match {
+    case g: GraftFileIndex =>
+      (this eq g) || (!live && !g.live && dir == g.dir &&
+        meta.generation == g.meta.generation &&
+        meta.files.map(_.name) == g.meta.files.map(_.name) &&
+        dataSchema == g.dataSchema)
+    case _ => false
+  }
+
+  override def hashCode: Int =
+    if (live) System.identityHashCode(this)
+    else (dir, meta.generation, meta.files.map(_.name)).##
 }
 
 object GraftFileIndex {
+
+  /** A captured sidecar and the files served from it; the captured
+    * files' lengths come from one directory listing, on first use. */
+  private[sources] final class Snapshot(spark: SparkSession, dir: String,
+      val captured: DatasetMeta, files: Seq[FileStat]) {
+    val served: DatasetMeta = captured.copy(files = files)
+
+    lazy val statuses: Map[String, FileStatus] = {
+      val names = captured.files.map(_.name).toSet
+      val p = new HPath(dir)
+      if (names.isEmpty) Map.empty
+      else p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(p).iterator
+        .filter(s => s.isFile && names(s.getPath.getName))
+        .map(s => s.getPath.getName -> s).toMap
+    }
+
+    lazy val sidecarSchema: StructType =
+      if (captured.schemaJson.nonEmpty) asNullable(
+        DataType.fromJson(captured.schemaJson).asInstanceOf[StructType])
+      else new ParquetFileFormat()
+        .inferSchema(spark, Map.empty, captured.files.flatMap(f =>
+          statuses.get(f.name)))
+        .map(asNullable).getOrElse(throw new IllegalArgumentException(
+          s"graft dataset at $dir is empty and carries no schema"))
+  }
+
+  private def liveSnapshot(spark: SparkSession, dir: String): Snapshot = {
+    val m = Sidecar.read(spark.sparkContext.hadoopConfiguration, dir)
+    new Snapshot(spark, dir, m, m.files)
+  }
+
+  /** An index pinned to the captured snapshot `m`, serving `files` (of
+    * `m.files`) through `schema` when given, else `m`'s sidecar schema.
+    * Never refreshed: a plan built on it reads exactly these files. */
+  def pinned(spark: SparkSession, dir: String, m: DatasetMeta,
+      files: Seq[FileStat], schema: Option[StructType]): GraftFileIndex =
+    new GraftFileIndex(spark, dir, live = false,
+      new Snapshot(spark, dir, m, files), schema)
+
+  /** The range test: whether a file's ordered [min, max] can hold a
+    * value in [lo, hiExcl) (None = unbounded side) — the zone-map
+    * selection of `rangeDF`, range deletes, compaction and range NDV. */
+  def inRange(f: FileStat, lo: Option[OrdVal], hiExcl: Option[OrdVal])
+      : Boolean =
+    lo.forall(f.max >= _) && hiExcl.forall(f.min < _)
+
+  /** The point test: the files whose ordered [min, max] holds any of
+    * `points`, by binary search over the sorted point set (O(F log K)).
+    */
+  def covering(files: Seq[FileStat], points: Seq[OrdVal]): Seq[FileStat] = {
+    val sorted = points.distinct.sorted.toIndexedSeq
+    files.filter(f => anyIn(sorted, Some(f.min), Some(f.max)))
+  }
+
+  /** Whether the sorted point set holds a value in [lo, hi] (None =
+    * unbounded side): the first point >= lo, found by binary search. */
+  private def anyIn(sorted: IndexedSeq[OrdVal], lo: Option[OrdVal],
+      hi: Option[OrdVal]): Boolean = {
+    val a = lo.fold(0)(sorted.search(_).insertionPoint)
+    a < sorted.length && hi.forall(sorted(a) <= _)
+  }
 
   /** Zone-map file selection: keep the files whose stats can satisfy
     * every conjunct's constraint — the ordered column prunes on the
@@ -182,9 +225,10 @@ object GraftFileIndex {
       r(c)._1.forall(_ < v)
   }
   private case class Points(c: String, vs: Seq[OrdVal]) extends Bound {
+    private lazy val sorted = vs.distinct.sorted.toIndexedSeq
     def admits(r: String => (Option[OrdVal], Option[OrdVal])) = {
       val (lo, hi) = r(c)
-      vs.exists(v => lo.forall(_ <= v) && hi.forall(_ >= v))
+      anyIn(sorted, lo, hi)
     }
   }
   private case class OrB(l: Bound, r: Bound) extends Bound {

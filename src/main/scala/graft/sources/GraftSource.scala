@@ -146,8 +146,10 @@ object GraftSource {
       parameters: Map[String, String]): HadoopFsRelation = {
     val gen = parameters.get("generation").map(_.trim.toLong)
     val index = gen match {
-      case Some(g) => new GraftFileIndex(spark, dir, g)
-      case None    => new GraftFileIndex(spark, dir)
+      case Some(g) =>
+        val m = new OrderedDataset(spark, dir).metaAsOf(g)
+        GraftFileIndex.pinned(spark, dir, m, m.files, None)
+      case None => new GraftFileIndex(spark, dir)
     }
     new HadoopFsRelation(index, StructType(Nil), index.dataSchema, None,
       new ParquetFileFormat, Map.empty[String, String])(spark)

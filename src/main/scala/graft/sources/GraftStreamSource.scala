@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.SparkInternals
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 import graft.store.OrderedDataset
 
 /** The ordered store as a NATIVE Structured Streaming source (the
@@ -121,19 +121,15 @@ final class GraftStreamSource(spark: SparkSession, dir: String,
 }
 
 object GraftStreamSource {
-  /** Streaming schema = the sidecar schema (nullable-relaxed, exactly
-    * what batch reads serve); requires the dataset to exist when the
-    * stream starts so the schema is known. */
+  /** Streaming schema = exactly what batch reads serve (the
+    * nullable-relaxed sidecar schema); requires the dataset to exist
+    * when the stream starts so the schema is known. */
   private[sources] def schemaOf(spark: SparkSession, dir: String)
       : StructType = {
     val ds = new OrderedDataset(spark, dir)
     require(ds.exists,
       s"graft streaming source requires an existing dataset at $dir " +
         "(create it with a first write, then start the stream)")
-    val m = ds.meta
-    if (m.schemaJson.nonEmpty)
-      SparkInternals.asNullable(
-        DataType.fromJson(m.schemaJson).asInstanceOf[StructType])
-    else ds.df.schema
+    ds.df.schema
   }
 }

@@ -3,8 +3,11 @@ package graft.store
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
+import graft.sources.GraftFileIndex
 
 /** Row-group sizing target (ref write/write.py:198-231: int → NRows
   * strategy, freqstr → TimePeriod strategy).
@@ -128,23 +131,25 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
 
   private def fs: FileSystem = new HPath(dir).getFileSystem(conf)
 
-  private def filePaths(m: DatasetMeta): Seq[String] =
-    m.files.map(f => s"$dir/${f.name}")
-
-  /** Read dataset files through the SIDECAR schema (parquet resolves
-    * by name): files written before an additive schema evolution
-    * (`WriteOpts.mergeSchema`) lack the newer columns and serve them
-    * as nulls; footer inference would instead pick one file's schema
-    * and silently drop the others' columns. Pre-schema sidecars fall
-    * back to inference (their files are schema-uniform by the old
-    * write check).
+  /** The one read path: `files` of the captured snapshot `m` as a
+    * parquet [[HadoopFsRelation]] over a [[GraftFileIndex]] pinned to
+    * them — Spark's whole file-scan machinery, no listing job however
+    * many files, a relation size of exactly the selected files' bytes,
+    * and [[graft.sources.GraftStatsAgg]]'s metadata answers for
+    * COUNT/MIN/MAX. Files are read through `schema` if given, else the
+    * SIDECAR schema (parquet resolves by name): files written before an
+    * additive schema evolution (`WriteOpts.mergeSchema`) lack the newer
+    * columns and serve them as nulls; footer inference would instead
+    * pick one file's schema and silently drop the others' columns. No
+    * files is the empty read, which keeps the dataset's columns.
     */
-  private def readFiles(m: DatasetMeta, paths: Seq[String]): DataFrame =
-    if (m.schemaJson.isEmpty) spark.read.parquet(paths: _*)
-    else spark.read.schema(
-      org.apache.spark.sql.graftbridge.SparkInternals.asNullable(
-        DataType.fromJson(m.schemaJson).asInstanceOf[StructType]))
-      .parquet(paths: _*)
+  private def read(m: DatasetMeta, files: Seq[FileStat],
+      schema: Option[StructType]): DataFrame = {
+    val index = GraftFileIndex.pinned(spark, dir, m, files, schema)
+    spark.baseRelationToDataFrame(new HadoopFsRelation(index,
+      StructType(Nil), index.dataSchema, None, new ParquetFileFormat,
+      Map.empty[String, String])(spark))
+  }
 
   /** Full scan; physical file order is not an ordering guarantee — use
     * orderedDf for an `ordered_on`-sorted view (ref base.py:440-459).
@@ -160,9 +165,7 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     * unions). Files the snapshot references stay readable for
     * [[OrderedDataset.retireGraceMs]] past replacement.
     */
-  private[graft] def dfOf(m: DatasetMeta): DataFrame =
-    if (m.files.isEmpty) emptyLike(m)
-    else readFiles(m, m.files.map(f => s"$dir/${f.name}"))
+  private[graft] def dfOf(m: DatasetMeta): DataFrame = filesDFOf(m, m.files)
 
   def orderedDf: DataFrame = { val m = meta; df.orderBy(m.orderedOn) }
 
@@ -173,34 +176,37 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
   /** Generations currently addressable by [[dfAsOf]]: the retained
     * snapshots still inside the reader grace window, plus the live one.
     */
-  def generations: Seq[Long] = {
+  def generations: Seq[Long] =
+    (retained ++ (if (exists) Seq(meta.generation) else Nil)).sorted
+
+  /** Generations kept as `_graftmd.v<g>.json` snapshots. */
+  private def retained: Seq[Long] = {
     val fsys = fs
     val d = new HPath(dir)
-    val retained =
-      if (!fsys.exists(d)) Seq.empty
-      else fsys.listStatus(d).toSeq.flatMap(st => st.getPath.getName match {
-        case Sidecar.VersionedRe(g) => Some(g.toLong)
-        case _ => None
-      })
-    (retained ++ (if (exists) Seq(meta.generation) else Nil)).sorted
+    if (!fsys.exists(d)) Seq.empty
+    else fsys.listStatus(d).toSeq.flatMap(st => st.getPath.getName match {
+      case Sidecar.VersionedRe(g) => Some(g.toLong)
+      case _ => None
+    })
   }
 
   /** Metadata as of a retained generation. Snapshots (and the data
     * files their file lists reference) survive `retireGraceMs` past
     * replacement, then age out — a miss names the window. */
-  def metaAsOf(gen: Long): DatasetMeta = {
-    val m = meta
-    if (gen == m.generation) m
+  def metaAsOf(gen: Long): DatasetMeta = metaAsOf(gen, meta)
+
+  /** [[metaAsOf]] against the already-read live sidecar `live`. */
+  private def metaAsOf(gen: Long, live: DatasetMeta): DatasetMeta =
+    if (gen == live.generation) live
     else {
       val p = new HPath(dir, Sidecar.versionedName(gen))
       if (!fs.exists(p)) throw new IllegalArgumentException(
         s"generation $gen of $dir is not retained (live is " +
-          s"${m.generation}; snapshots are kept for " +
+          s"${live.generation}; snapshots are kept for " +
           s"${OrderedDataset.retireGraceMs} ms past replacement — " +
           s"available: ${generations.mkString(",")})")
       Sidecar.readPath(conf, p)
     }
-  }
 
   /** Time-travel read: the dataset exactly as generation `gen` saw it
     * (Delta-style `VERSION AS OF`). Works because a commit retires
@@ -219,13 +225,14 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     * archive time for retained ones (an upper bound within one commit
     * cycle).
     */
-  def history: Seq[CommitInfo] = {
+  def history: Seq[CommitInfo] = if (!exists) Nil else {
     val fsys = fs
-    val gens = generations
-    val metas = gens.map(g => g -> metaAsOf(g))
+    val live = meta // parsed once: every generation below compares to it
+    val gens = (retained :+ live.generation).sorted
+    val metas = gens.map(g => g -> metaAsOf(g, live))
     val times = gens.map { g =>
       val p =
-        if (exists && g == meta.generation) Sidecar.path(dir)
+        if (g == live.generation) Sidecar.path(dir)
         else new HPath(dir, Sidecar.versionedName(g))
       g -> fsys.getFileStatus(p).getModificationTime
     }.toMap
@@ -260,17 +267,14 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
   def changeFeed(fromGen: Long, toGen: Long): DataFrame = {
     require(fromGen < toGen,
       s"changeFeed wants fromGen < toGen, got $fromGen >= $toGen")
-    val mF = metaAsOf(fromGen)
-    val mT = metaAsOf(toGen)
+    val live = meta
+    val mF = metaAsOf(fromGen, live)
+    val mT = metaAsOf(toGen, live)
     val fNames = mF.files.map(_.name).toSet
     val tNames = mT.files.map(_.name).toSet
-    val onlyF = mF.files.filterNot(f => tNames(f.name))
-    val onlyT = mT.files.filterNot(f => fNames(f.name))
-    def slice(files: Seq[FileStat]): DataFrame =
-      if (files.isEmpty) emptyLike(mT)
-      else readFiles(mT, files.map(f => s"$dir/${f.name}"))
-    val oldSide = slice(onlyF)
-    val newSide = slice(onlyT)
+    val newSide = filesDFOf(mT, mT.files.filterNot(f => fNames(f.name)))
+    val oldSide = read(mF, mF.files.filterNot(f => tNames(f.name)),
+      Some(newSide.schema))
     // single-pass count-diff instead of two exceptAlls: each side is
     // scanned and shuffled ONCE (a grouped count per side, full-outer
     // join on the identical grouping keys — partitioning is reused, no
@@ -294,17 +298,6 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
       .drop("__i")
   }
 
-  /** Empty frame that keeps the dataset's columns: the schema is
-    * persisted in the sidecar at every write, so a dataset created via
-    * an empty/fully-deduped first batch still resolves column
-    * references (orderedDf, AggStream.results, selections).
-    */
-  private def emptyLike(m: DatasetMeta): DataFrame =
-    if (m.schemaJson.isEmpty) spark.emptyDataFrame
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      DataType.fromJson(m.schemaJson).asInstanceOf[StructType])
-
   /** Zone-map-pruned range scan [lo, hiExcl) — files are selected from
     * sidecar stats without touching parquet footers
     * (ref iter_intersections.py:136-151; SURVEY §4).
@@ -315,27 +308,15 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
   /** [[rangeDF]] against a CAPTURED metadata snapshot (see [[dfOf]]). */
   private[graft] def rangeDFOf(m: DatasetMeta, lo: Option[OrdVal],
       hiExcl: Option[OrdVal]): DataFrame = {
-    val sel = m.files.filter(f =>
-      lo.forall(l => f.max >= l) && hiExcl.forall(h => f.min < h))
-    if (sel.isEmpty) emptySelection(m)
-    else {
-      var d = readFiles(m, sel.map(f => s"$dir/${f.name}"))
-      val dt = d.schema(m.orderedOn).dataType
-      lo.foreach(l =>
-        d = d.filter(col(m.orderedOn) >= lit(l.toLiteralFor(dt))))
-      hiExcl.foreach(h =>
-        d = d.filter(col(m.orderedOn) < lit(h.toLiteralFor(dt))))
-      d
-    }
+    var d =
+      filesDFOf(m, m.files.filter(GraftFileIndex.inRange(_, lo, hiExcl)))
+    val dt = d.schema(m.orderedOn).dataType
+    lo.foreach(l =>
+      d = d.filter(col(m.orderedOn) >= lit(l.toLiteralFor(dt))))
+    hiExcl.foreach(h =>
+      d = d.filter(col(m.orderedOn) < lit(h.toLiteralFor(dt))))
+    d
   }
-
-  /** Empty result for a zone-map miss: the sidecar schema serves column
-    * resolution at zero I/O; only pre-schema datasets (no schemaJson)
-    * fall back to a parquet read for the schema.
-    */
-  private def emptySelection(m: DatasetMeta): DataFrame =
-    if (m.files.isEmpty || m.schemaJson.nonEmpty) emptyLike(m)
-    else spark.read.parquet(filePaths(m): _*).limit(0)
 
   /** Zone-map-pruned multi-point scan: ONE scan branch over exactly the
     * files whose [min, max] contains any of the given ordered values.
@@ -350,31 +331,23 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
   /** [[multiPointDF]] against a CAPTURED metadata snapshot (see
     * [[dfOf]]). */
   private[graft] def multiPointDFOf(m: DatasetMeta,
-      points: Seq[OrdVal]): DataFrame = {
-    val sel = m.files.filter(f =>
-      points.exists(p => f.min <= p && p <= f.max))
-    if (sel.isEmpty) emptySelection(m)
-    else readFiles(m, sel.map(f => s"$dir/${f.name}"))
-  }
+      points: Seq[OrdVal]): DataFrame =
+    filesDFOf(m, GraftFileIndex.covering(m.files, points))
 
-  /** Scan exactly the given sidecar files of a CAPTURED snapshot — the
-    * segmented probes' mid-tier primitive: the file selection is
-    * computed elsewhere (distributively, from the zone maps the
-    * snapshot carries), and this turns it into one scan branch.
+  /** Scan exactly the given sidecar files of a CAPTURED snapshot, read
+    * through its sidecar schema — every selection above ends here, as
+    * do the segmented probes, whose file selection is computed
+    * elsewhere from the zone maps the snapshot carries.
     */
-  private[graft] def filesDFOf(m: DatasetMeta, names: Seq[String])
-      : DataFrame =
-    if (names.isEmpty) emptySelection(m)
-    else readFiles(m, names.map(n => s"$dir/$n"))
+  private[graft] def filesDFOf(m: DatasetMeta, files: Seq[FileStat])
+      : DataFrame = read(m, files, None)
 
   /** Row-group-slice view by position in min-order, the analog of
     * `opd[i:j]` (ref base.py:297-330, read_only.py:52-168).
     */
   def sliceDF(from: Int, untilExcl: Int): DataFrame = {
     val m = meta
-    val sel = m.files.slice(from, untilExcl)
-    if (sel.isEmpty) emptyLike(m)
-    else readFiles(m, sel.map(f => s"$dir/${f.name}"))
+    filesDFOf(m, m.files.slice(from, untilExcl))
   }
 
   /** Approximate COUNT(DISTINCT col) from the per-file HLL sketches in
@@ -405,8 +378,7 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
 
   private def approxDistinctOf(m: DatasetMeta, colName: String,
       lo: Option[OrdVal], hiExcl: Option[OrdVal]): Long = {
-    val sel = m.files.filter(f =>
-      lo.forall(l => f.max >= l) && hiExcl.forall(h => f.min < h))
+    val sel = m.files.filter(GraftFileIndex.inRange(_, lo, hiExcl))
     val missing = sel.filter(!_.hll.contains(colName))
     require(missing.isEmpty,
       s"${missing.size} of ${sel.size} selected files have no HLL " +
@@ -469,7 +441,7 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     val missing = m.files.filter(f => want.exists(!f.hll.contains(_)))
     if (missing.isEmpty) 0
     else {
-      val d = readFiles(m, missing.map(f => s"$dir/${f.name}"))
+      val d = filesDFOf(m, missing)
       val aggs = want.map(c =>
         hll_sketch_agg(col(c), OrderedDataset.HllLgK).as(s"hll_$c"))
       val byFile = d
@@ -946,13 +918,11 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     for (l <- lo; h <- hiExcl) require(l < h,
       s"empty delete range: lo=$l !< hiExcl=$h")
     val m = meta
-    def inRange(f: FileStat) =
-      lo.forall(l => f.max >= l) && hiExcl.forall(h => f.min < h)
     def covered(f: FileStat) =
       lo.forall(l => f.min >= l) && hiExcl.forall(h => f.max < h)
-    val dropped = m.files.filter(covered)
-    val partial = m.files.filter(f => inRange(f) && !covered(f))
-    val kept    = m.files.filterNot(inRange)
+    val (touched, kept) =
+      m.files.partition(GraftFileIndex.inRange(_, lo, hiExcl))
+    val (dropped, partial) = touched.partition(covered)
     // metadata-only delete: swap in a sidecar of the untouched files,
     // retire the covered ones
     def dropCovered(untouched: Seq[FileStat]): DeleteReport = {
@@ -968,7 +938,7 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     else if (partial.isEmpty) dropCovered(kept)
     else {
       // boundary files: rewrite only them, keeping rows OUTSIDE the range
-      val d0 = readFiles(m, partial.map(f => s"$dir/${f.name}"))
+      val d0 = filesDFOf(m, partial)
       val dt = d0.schema(m.orderedOn).dataType
       val survive = (
         lo.map(l => col(m.orderedOn) < lit(l.toLiteralFor(dt))),
@@ -1079,7 +1049,7 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     // stored ∪ batch — stored columns absent from the batch are
     // null-filled, batch-only columns append after the stored ones.
     // Files written earlier keep their narrower physical schema; every
-    // read goes through the sidecar schema (readFiles), which serves
+    // read goes through the sidecar schema (read), which serves
     // the missing columns as nulls — the Delta/parquet-mergeSchema
     // contract, which the reference rejects outright (write.py check).
     val storedSchema: Option[StructType] = m0
@@ -1145,14 +1115,11 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
         // read through the TARGET schema (batch ∪ stored): overlap
         // files written before an additive evolution serve the newer
         // columns as nulls instead of breaking the union
-        val rd =
-          if (storedSchema.isDefined)
-            spark.read.schema(
-              org.apache.spark.sql.graftbridge.SparkInternals.asNullable(
-                StructType(cached.schema.fields
-                  .filterNot(f => f.name == SeqCol || f.name == RidCol))))
-          else spark.read
-        Some(rd.parquet(rewrite.map(f => s"$dir/${f.name}"): _*)
+        val target = storedSchema.map(_ =>
+          org.apache.spark.sql.graftbridge.SparkInternals.asNullable(
+            StructType(cached.schema.fields
+              .filterNot(f => f.name == SeqCol || f.name == RidCol))))
+        Some(read(m0.get, rewrite, target)
           .withColumn(SeqCol, element_at(
             map(nameToSeq: _*),
             regexp_extract(input_file_name(), "[^/]+$", 0)))
@@ -1503,8 +1470,7 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
       lo: Option[OrdVal] = None,
       hiExcl: Option[OrdVal] = None): Int = withWriteLock {
     val m = meta
-    val scoped = m.files.filter(f =>
-      lo.forall(l => f.max >= l) && hiExcl.forall(h => f.min < h))
+    val scoped = m.files.filter(GraftFileIndex.inRange(_, lo, hiExcl))
     // re-clustering request: even already-on-target files need a
     // rewrite when the caller asks for a NEW cluster layout (sticky
     // columns flow through kv; passing the current ones again is a
@@ -1580,7 +1546,7 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
       val mNow = meta
       val runNames = runFiles.map(_.name).toSet
       val keptFiles = mNow.files.filterNot(f => runNames.contains(f.name))
-      val df = readFiles(mNow, runFiles.map(f => s"$dir/${f.name}"))
+      val df = filesDFOf(mNow, runFiles)
       materialize(df, runFiles.map(_.rows).sum, runFiles, keptFiles,
         Some(mNow), WriteOpts(mNow.orderedOn, target,
           clusterBy = clusterBy),

@@ -21,13 +21,6 @@ object SparkInternals {
   def expressionEager(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
-  /** Deterministically release the storage behind a
-    * `localCheckpoint()`ed DataFrame. `Dataset.unpersist` only consults
-    * the CacheManager, which does not track checkpoint blocks — they
-    * otherwise linger until the ContextCleaner notices the RDD was
-    * GC'd, accumulating executor storage across an iterative loop's
-    * rounds. No-op for non-checkpointed frames.
-    */
   /** `DataType.asNullable` is spark-private; file sources always relax
     * to nullable on read, so a schema served from the graft sidecar
     * must match.
@@ -64,6 +57,13 @@ object SparkInternals {
       ds.queryExecution.toRdd, df.schema, isStreaming = false)
   }
 
+  /** Deterministically release the storage behind a
+    * `localCheckpoint()`ed DataFrame. `Dataset.unpersist` only consults
+    * the CacheManager, which does not track checkpoint blocks — they
+    * otherwise linger until the ContextCleaner notices the RDD was
+    * GC'd, accumulating executor storage across an iterative loop's
+    * rounds. No-op for non-checkpointed frames.
+    */
   def unpersistCheckpoint(df: Dataset[_]): Unit =
     // collect, don't pattern-match the root: a `.select(...)` over a
     // checkpointed frame analyzes to Project(LogicalRDD), so a

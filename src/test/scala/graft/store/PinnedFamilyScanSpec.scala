@@ -55,6 +55,36 @@ class PinnedFamilyScanSpec extends SparkSpec {
     } finally st.betweenPinnedScans = () => ()
   }
 
+  test("multiPointDFOf over captured snapshots serves the pre-append " +
+      "rows when an append lands after the capture") {
+    val st = newStore()
+    val ks = st.shardedWrite(evDf(6000), WriteOpts("t", NRows(1000)),
+      i => s"shard$i", targetRowsPerShard = 3000L)
+    val lo1 = st.get(ks(1)).meta.kv("graft.shard.lo").toLong
+    val points = (0 until 50).map(i => OrdLong(lo1 + i))
+    // capture every shard's sidecar, and build one read before the
+    // append
+    val captured = ks.map(k => st.get(k) -> st.get(k).meta)
+    val before = captured.map { case (d, m) => d.multiPointDFOf(m, points) }
+    // a writer lands 50 rows on exactly those points in shard 1,
+    // rewriting the files that cover them
+    st.get(ks(1)).write(
+      (0 until 50).map(i => (lo1 + i, -1.0)).toDF("t", "v"),
+      WriteOpts("t", NRows(1000))): Unit
+    val after = captured.map { case (d, m) => d.multiPointDFOf(m, points) }
+    val pts = points.map(_.v)
+    for (reads <- Seq(before, after)) {
+      val rows = reads.map(_.where(col("t").isin(pts: _*))).reduce(_ union _)
+      assert(rows.count() == 50L)
+      assert(rows.filter(col("v") === -1.0).count() == 0L)
+    }
+    // a fresh read sees the appended rows
+    val fresh = st.get(ks(1)).multiPointDF(points)
+      .where(col("t").isin(pts: _*))
+    assert(fresh.count() == 100L)
+    assert(fresh.filter(col("v") === -1.0).count() == 50L)
+  }
+
   test("iterIntersections slices are pinned: an append mid-iteration " +
       "does not leak into later intervals") {
     val st = newStore()
