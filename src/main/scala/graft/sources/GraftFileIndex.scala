@@ -23,9 +23,8 @@ import graft.store.{DatasetMeta, FileStat, OrdDouble, OrdLong, OrdTs, OrdVal, Si
   * this index does not understand simply prunes nothing.
   *
   * 100 TB design: planning is O(#files) driver work over the loaded
-  * sidecar, and file lengths come from ONE `listStatus` of the
-  * directory on first use — where `spark.read.parquet(paths)` stats
-  * every path and, above 32 paths, runs a Spark listing job. The
+  * sidecar, file lengths included — where `spark.read.parquet(paths)`
+  * stats every path and, above 32 paths, runs a Spark listing job. The
   * snapshot is immutable, so a plan cannot mix two store generations.
   */
 final class GraftFileIndex private (spark: SparkSession, val dir: String,
@@ -84,7 +83,8 @@ final class GraftFileIndex private (spark: SparkSession, val dir: String,
     lastSelectedFiles = sel.size
     // a sidecar file absent from the directory listing must fail the
     // query, not silently shrink it (can only happen if a dataset's
-    // retire-grace window elapsed under a long-lived index — refresh())
+    // retire-grace window elapsed under a long-lived index — refresh());
+    // a gone file served from recorded lengths fails the scan instead
     val files = sel.map { f =>
       statuses.getOrElse(f.name, {
         val p = new HPath(s"$dir/${f.name}")
@@ -116,8 +116,10 @@ final class GraftFileIndex private (spark: SparkSession, val dir: String,
 
 object GraftFileIndex {
 
-  /** A captured sidecar and the files served from it; the captured
-    * files' lengths come from one directory listing, on first use. */
+  /** A captured sidecar and the files served from it. The captured
+    * files' statuses are built from the lengths the sidecar records;
+    * only a sidecar written before lengths were recorded costs one
+    * directory listing, on first use. */
   private[sources] final class Snapshot(spark: SparkSession, dir: String,
       val captured: DatasetMeta, files: Seq[FileStat]) {
     val served: DatasetMeta = captured.copy(files = files)
@@ -125,9 +127,14 @@ object GraftFileIndex {
     lazy val statuses: Map[String, FileStatus] = {
       val names = captured.files.map(_.name).toSet
       val p = new HPath(dir)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (names.isEmpty) Map.empty
-      else p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .listStatus(p).iterator
+      else if (captured.files.forall(_.bytes.isDefined)) {
+        val q = fs.makeQualified(p)
+        captured.files.map(f => f.name ->
+          new FileStatus(f.bytes.get, false, 0, 0L, 0L, new HPath(q, f.name)))
+          .toMap
+      } else fs.listStatus(p).iterator
         .filter(s => s.isFile && names(s.getPath.getName))
         .map(s => s.getPath.getName -> s).toMap
     }

@@ -66,6 +66,8 @@ object OrdVal {
   def fromAny(v: Any): OrdVal = v match {
     case l: java.lang.Long       => OrdLong(l)
     case i: java.lang.Integer    => OrdLong(i.toLong)
+    case s: java.lang.Short      => OrdLong(s.toLong)
+    case b: java.lang.Byte       => OrdLong(b.toLong)
     case d: java.lang.Double     => OrdDouble(d)
     case f: java.lang.Float     => OrdDouble(f.toDouble)
     case s: String               => OrdStr(s)

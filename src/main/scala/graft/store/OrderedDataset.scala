@@ -767,14 +767,19 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     * the rewrite slice's stored rows and the batch's rows sharing a
     * `duplicatesOn` key reduce to one row through `combine`, aggregates
     * naming every non-key column (AggStream's mergeable partials). The
-    * overlap files are read once, by the write itself. An empty batch
-    * commits `opts.kv` alone, creating the dataset if it is missing.
+    * overlap files are read once, by the write itself. `stats` are the
+    * batch's bounds, computed by the caller in a pass it runs anyway,
+    * so the batch runs no action of its own: its ordered [min, max]
+    * (exact) and an upper bound on its rows, which only decides whether
+    * the dedup count runs. A batch with no rows commits `opts.kv` alone,
+    * creating the dataset if it is missing.
     */
   private[graft] def writeCombining(batch: DataFrame, opts: WriteOpts,
-      combine: Seq[Column]): UpsertReport = {
+      combine: Seq[Column], stats: BatchStats): UpsertReport = {
     require(opts.duplicatesOn.exists(_.nonEmpty),
       "a combining write needs explicit duplicatesOn key columns")
-    withWriteLock { writeBody(batch, opts, combine = combine) }
+    withWriteLock { writeBody(batch, opts, combine = combine,
+      known = Some(stats)) }
   }
 
   /** [[write]] with a caller validation run INSIDE the write lock,
@@ -985,7 +990,8 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     */
   private def writeBody(batch: DataFrame, opts: WriteOpts,
       optimistic: Boolean = false,
-      combine: Seq[Column] = Nil): UpsertReport = {
+      combine: Seq[Column] = Nil,
+      known: Option[BatchStats] = None): UpsertReport = {
     val m0: Option[DatasetMeta] = if (exists) Some(meta) else None
     m0.foreach { m =>
       require(m.orderedOn == opts.orderedOn,
@@ -1077,19 +1083,21 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
       case _ => batch
     }
     val ordType = typeTag(effBatch.schema(opts.orderedOn).dataType)
-    val cached = effBatch.persist()
+    // the batch feeds the stats action AND the write: cache it, unless
+    // the caller brought the stats and only the write reads it
+    val cached = if (known.isEmpty) effBatch.persist() else effBatch
     try {
-      val bStats = cached.agg(
-        min(opts.orderedOn), max(opts.orderedOn), count(lit(1)),
-        count(col(opts.orderedOn))).head()
-      val batchRows = bStats.getLong(2)
-      // reject null ordered_on up front: null rows would fall outside
-      // every file's [min,max] and become invisible to range scans (and
-      // an all-null batch would NPE in OrdVal.fromAny below)
-      require(bStats.getLong(3) == batchRows,
-        s"ordered_on '${opts.orderedOn}' contains " +
-          s"${batchRows - bStats.getLong(3)} null values; the ordered " +
-          "store requires a total order — drop or fill them first")
+      val stats = known.getOrElse {
+        val st = cached.agg(
+          min(opts.orderedOn), max(opts.orderedOn), count(lit(1)),
+          count(col(opts.orderedOn))).head()
+        // reject null ordered_on up front: null rows would fall outside
+        // every file's [min,max] and become invisible to range scans
+        requireNoNulls(opts.orderedOn, st.getLong(2) - st.getLong(3))
+        BatchStats(st.getLong(2), Option(st.get(0)).map(OrdVal.fromAny),
+          Option(st.get(1)).map(OrdVal.fromAny))
+      }
+      val batchRows = stats.rows
       if (batchRows == 0) {
         val m = m0.getOrElse(DatasetMeta(opts.orderedOn, ordType, Nil,
           Map.empty, 0L, cached.drop(SeqCol, RidCol).schema.json))
@@ -1099,8 +1107,7 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
         }
         return UpsertReport(0, m.files.size, 0, 0)
       }
-      val bMin = OrdVal.fromAny(bStats.get(0))
-      val bMax = OrdVal.fromAny(bStats.get(1))
+      val (bMin, bMax) = (stats.min.get, stats.max.get)
 
       val files = m0.map(_.files).getOrElse(Nil)
       val (rewriteIdx, keepIdx) = planRewrite(files, bMin, bMax, opts)
@@ -1171,7 +1178,7 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
       }
       materialize(deduped, totalIn, rewrite, kept, m0, opts, ordType,
         hasProvenance = true, optimistic = optimistic)
-    } finally cached.unpersist()
+    } finally if (known.isEmpty) cached.unpersist(): Unit
   }
 
   /** Test seam (OptimisticWriteSpec): runs after an optimistic prepare
@@ -1207,9 +1214,15 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     }
 
   /** Shared execution tail of upsert and compaction: size into range
-    * partitions, write one file per partition to a tmp dir, collect
-    * stats, then commit (move files in, swap sidecar atomically, delete
-    * the replaced files).
+    * partitions, write one file per partition to a tmp dir, then commit
+    * (move files in, swap sidecar atomically, retire the replaced
+    * files).
+    *
+    * Scale notes: the write is ONE Spark SQL execution (range sample,
+    * shuffle, write), and the sidecar entry of every file comes from
+    * the tasks that wrote it ([[FileStatsTracker]]) — the commit opens
+    * no written file again, so its cost past the write is the renames
+    * and one sidecar swap, whatever the file count.
     */
   private def materialize(data: DataFrame, totalIn: Long,
       rewrite: Seq[FileStat], kept: Seq[FileStat],
@@ -1293,91 +1306,27 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     val effBloomCols =
       if (opts.bloomFilterCols.nonEmpty) opts.bloomFilterCols
       else OrderedDataset.stickyCols(kv0, OrderedDataset.BloomColsKey)
-    val writer0 = (if (hasProvenance) sized.drop(SeqCol, RidCol) else sized)
-      .write.mode("overwrite")
-    effBloomCols
-      .foldLeft(writer0)((w, c) =>
-        w.option(s"parquet.bloom.filter.enabled#$c", "true"))
-      .parquet(tmpDir)
-
-    // ---- stats of the written files (one cheap pruned job) ----
-    // Besides the ordered-column zone map, collect secondary-column
-    // min/max (Delta-style data skipping; see ColStat for the string
-    // prefix/truncation rules) in the SAME pass — one read of the
-    // just-written (page-cache-warm) tmp files either way.
-    // read back through the schema just written (the one the sidecar
-    // stores): no footer-inference job on the tmp dir
-    val writtenSchema =
-      (if (hasProvenance) data.drop(SeqCol, RidCol) else data).schema
-    val readBack = spark.read
-      .schema(org.apache.spark.sql.graftbridge.SparkInternals
-        .asNullable(writtenSchema))
-      .parquet(tmpDir)
-    val statCols: Seq[StructField] =
-      if (!opts.colStats) Nil
-      else readBack.schema.fields.toSeq
-        .filter(_.name != opts.orderedOn)
-        .filter(_.dataType match {
-          case LongType | IntegerType | ShortType | ByteType | DoubleType |
-               FloatType | TimestampNTZType | TimestampType | StringType =>
-            true
-          case _ => false
-        }).take(MaxStatCols)
-    val colAggs = statCols.zipWithIndex.flatMap { case (f, i) =>
-      f.dataType match {
-        case StringType => Seq(
-          min(substring(col(f.name), 1, StatStrPrefix)).as(s"c${i}_mn"),
-          max(substring(col(f.name), 1, StatStrPrefix)).as(s"c${i}_mx"),
-          max(length(col(f.name))).as(s"c${i}_len"))
-        case _ => Seq(
-          min(col(f.name)).as(s"c${i}_mn"),
-          max(col(f.name)).as(s"c${i}_mx"))
-      }
-    }
-    // per-file HLL sketches (WriteOpts.sketchCols, sticky via kv):
-    // collected in the SAME stats pass; merged driver-side later by
-    // approxDistinct with zero data IO
+    val out = if (hasProvenance) sized.drop(SeqCol, RidCol) else sized
+    val writtenSchema = out.schema
+    // per-file HLL sketches (WriteOpts.sketchCols, sticky via kv), merged
+    // driver-side later by approxDistinct with zero data IO
     val effSketchCols =
       (if (opts.sketchCols.nonEmpty) opts.sketchCols
        else OrderedDataset.stickyCols(kv0, OrderedDataset.SketchColsKey))
-        .filter(c => readBack.schema.fields.exists(f => f.name == c &&
-          (f.dataType match {
-            case IntegerType | LongType | StringType | BinaryType => true
-            case _ => false
-          })))
-    val hllAggs = effSketchCols.map(c =>
-      hll_sketch_agg(col(c), OrderedDataset.HllLgK).as(s"hll_$c"))
-    val baseAggs = Seq(count(lit(1)).as("rows"),
-      min(opts.orderedOn).as("mn"), max(opts.orderedOn).as("mx")) ++
-      colAggs ++ hllAggs
-    def colStatsOf(r: org.apache.spark.sql.Row): Map[String, ColStat] =
-      statCols.zipWithIndex.flatMap { case (f, i) =>
-        val mnI = r.fieldIndex(s"c${i}_mn")
-        val mxI = r.fieldIndex(s"c${i}_mx")
-        val mn =
-          if (r.isNullAt(mnI)) None else Some(OrdVal.fromAny(r.get(mnI)))
-        val mxRaw =
-          if (r.isNullAt(mxI)) None else Some(OrdVal.fromAny(r.get(mxI)))
-        val mx = f.dataType match {
-          case StringType =>
-            val lenI = r.fieldIndex(s"c${i}_len")
-            // a truncated max prefix is NOT an upper bound — drop it
-            if (!r.isNullAt(lenI) && r.getAs[Int](lenI) <= StatStrPrefix)
-              mxRaw
-            else None
-          case _ => mxRaw
-        }
-        if (mn.isEmpty && mx.isEmpty) None
-        else Some(f.name -> ColStat(mn, mx))
-      }.toMap
-    def hllOf(r: org.apache.spark.sql.Row): Map[String, String] =
-      effSketchCols.map(c =>
-        c -> OrderedDataset.hllBase64(r, s"hll_$c")).toMap
-    val written = readBack
-      .groupBy(regexp_extract(input_file_name(), "[^/]+$", 0).as("f"))
-      .agg(baseAggs.head, baseAggs.tail: _*)
-      .collect()
-      .sortBy(r => OrdVal.fromAny(r.getAs[Any]("mn")))
+        .filter(c => writtenSchema.fields.exists(f => f.name == c &&
+          FileStatsTracker.sketchable(f.dataType)))
+
+    // ---- the write: each file's sidecar entry is built by the task
+    // writing it (rows, ordered and secondary zone maps, sketches,
+    // length) — no pass re-reads the written files ----
+    val tracker = new FileStatsTracker(writtenSchema, opts.orderedOn,
+      FileStatsTracker.statColumns(writtenSchema, opts.orderedOn,
+        opts.colStats), effSketchCols,
+      new org.apache.spark.util.SerializableConfiguration(conf))
+    org.apache.spark.sql.graftbridge.SparkInternals.writeParquet(out, tmpDir,
+      effBloomCols.map(c => s"parquet.bloom.filter.enabled#$c" -> "true")
+        .toMap, Seq(tracker))
+    val written = tracker.files.sortBy(_.min)
 
     // stats-dtype guards (ref base.py:338-357): fail BEFORE any rename,
     // leaving the dataset untouched (tmp dir removed here, and swept by
@@ -1390,10 +1339,10 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
           "row-group target, compact, or shard the corpus across store " +
           "keys (Store.shardedWrite)")
     }
-    written.find(_.getAs[Long]("rows") > MaxRowsPerFile).foreach { r =>
+    written.find(_.rows > MaxRowsPerFile).foreach { f =>
       fs.delete(new HPath(tmpDir), true)
       throw new IllegalStateException(
-        s"row group would hold ${r.getAs[Long]("rows")} rows, over the " +
+        s"row group would hold ${f.rows} rows, over the " +
           s"$MaxRowsPerFile-row stats limit; lower the row-group target")
     }
 
@@ -1405,19 +1354,17 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     if (optimistic) beforeOptimisticCommit()
     try commitSection(optimistic, m0.map(_.generation)) {
     var nextId = m0.map(_.nextFileId).getOrElse(0L)
-    val newStats = written.map { r =>
+    val newStats = written.map { f =>
       val id = nextId; nextId += 1
       val newName = f"f$id%08d.parquet"
-      if (!fs.rename(new HPath(s"$tmpDir/${r.getAs[String]("f")}"),
+      if (!fs.rename(new HPath(s"$tmpDir/${f.name}"),
         new HPath(s"$dir/$newName")))
         throw new java.io.IOException(
-          s"commit failed: rename of ${r.getAs[String]("f")} to " +
+          s"commit failed: rename of ${f.name} to " +
             s"$dir/$newName returned false; dataset unchanged " +
             "(sidecar not yet swapped)")
-      FileStat(id, newName, r.getAs[Long]("rows"),
-        OrdVal.fromAny(r.getAs[Any]("mn")), OrdVal.fromAny(r.getAs[Any]("mx")),
-        colStatsOf(r), hllOf(r))
-    }.toSeq
+      f.copy(id = id, name = newName)
+    }
     val allStats = (kept ++ newStats).sortBy(f => (f.min, f.id))
     val bloomKv =
       if (effBloomCols.isEmpty) Map.empty[String, String]
@@ -1700,6 +1647,19 @@ object OrderedDataset {
     * Spark `hll_sketch_agg` default. One constant everywhere so any
     * two sketches in any sidecar are union-compatible. */
   val HllLgK = 12
+
+  /** A batch's row count — or, from a caller that cannot count its
+    * rows exactly, an upper bound — and its ordered [min, max] (None
+    * when it has no rows). */
+  private[graft] final case class BatchStats(rows: Long,
+      min: Option[OrdVal], max: Option[OrdVal])
+
+  /** The ordered store needs a total order: rows with a null ordered
+    * value would fall outside every file's [min, max]. */
+  private[graft] def requireNoNulls(orderedOn: String, nulls: Long): Unit =
+    require(nulls == 0,
+      s"ordered_on '$orderedOn' contains $nulls null values; the ordered " +
+        "store requires a total order — drop or fill them first")
 
   /** The sticky layout columns recorded under `key` in a dataset's kv
     * (comma-joined; absent = none). */

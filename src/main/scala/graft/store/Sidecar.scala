@@ -21,6 +21,9 @@ final case class ColStat(min: Option[OrdVal], max: Option[OrdVal])
   * directory; files are one row group each (ref base.py:190-197).
   * `cols` holds secondary-column min/max for data skipping (empty on
   * sidecars written before the feature — never pruned on, still valid).
+  * `bytes` is the file's length, recorded when it was written (None on
+  * sidecars written before the field), so a read plans without listing
+  * the directory.
   */
 final case class FileStat(id: Long, name: String, rows: Long,
                           min: OrdVal, max: OrdVal,
@@ -30,7 +33,8 @@ final case class FileStat(id: Long, name: String, rows: Long,
                             * WriteOpts.sketchCols). Mergeable: the union
                             * across any file subset estimates that
                             * subset's distinct count. */
-                          hll: Map[String, String] = Map.empty)
+                          hll: Map[String, String] = Map.empty,
+                          bytes: Option[Long] = None)
 
 /** Dataset-level metadata: the enforced `ordered_on` column
   * (ref base.py:103-114), file stats sorted by min, a free-form kv map
@@ -124,7 +128,8 @@ object Sidecar {
       }.getOrElse(Map.empty[String, String])
       FileStat(f.get("id").asLong(), f.get("name").asText(),
         f.get("rows").asLong(),
-        OrdVal.readFrom(f, "min"), OrdVal.readFrom(f, "max"), cols, hll)
+        OrdVal.readFrom(f, "min"), OrdVal.readFrom(f, "max"), cols, hll,
+        Option(f.get("bytes")).map(_.asLong()))
     }.toSeq
     val kv = Option(root.get("kv")).map { k =>
       k.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
@@ -185,6 +190,7 @@ object Sidecar {
     meta.files.sortBy(f => (f.min, f.id)).foreach { f =>
       val n = arr.addObject()
       n.put("id", f.id); n.put("name", f.name); n.put("rows", f.rows)
+      f.bytes.foreach(n.put("bytes", _))
       OrdVal.writeTo(n, "min", f.min); OrdVal.writeTo(n, "max", f.max)
       if (f.cols.nonEmpty) {
         val cn = n.putObject("cols")

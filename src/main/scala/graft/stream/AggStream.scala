@@ -3,6 +3,7 @@ package graft.stream
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 import graft.agg.{AggFn, AggSpec, SegmentAgg}
 import graft.store._
 
@@ -65,9 +66,12 @@ final case class StreamKeyCfg(
   * Scale notes: every step is a distributed DataFrame op — partial agg
   * shuffles once by bin; the combine reads only the zone-map-selected
   * files the chunk's bins overlap, once, in the same job that rewrites
-  * them; nothing is collected to the driver but the chunk's min/max
-  * stats and the write's batch stats (plus a row count per count-binned
-  * key, whose processed-row kv commits with the data).
+  * them. A chunk runs ONE stats action shared by every key (the chunk's
+  * bounds and null check, each key's rows and bin bounds under its
+  * filter; withholding the max-valued block adds one more), then one
+  * write execution per key. A failing key filter thus fails the shared
+  * action before any key writes. Filters must be deterministic: the
+  * stats pass and the write each evaluate them.
   */
 final class AggStream[K](
     val store: Store[K],
@@ -78,13 +82,21 @@ final class AggStream[K](
 
   import AggStream._
 
+  keys.foreach { case (k, cfg) => require(cfg.filter.forall(
+    org.apache.spark.sql.graftbridge.SparkInternals.isDeterministic(
+      store.spark, _)), s"key $k: the seed filter must be deterministic") }
+
   /** Columns holding each bin's tiebreak bounds in the stored partials. */
   private def tbMin = "__tb_min"
   private def tbMax = "__tb_max"
 
+  /** A key's per-bin partials; a count bin's also carry its label
+    * (first ordered value) and its row count. */
   private def partialExprs(cfg: StreamKeyCfg): Seq[Column] =
     SegmentAgg.partialAggExprs(cfg.aggs, col(tieCol)) ++
-      Seq(min(col(tieCol)).as(tbMin), max(col(tieCol)).as(tbMax))
+      Seq(min(col(tieCol)).as(tbMin), max(col(tieCol)).as(tbMax)) ++
+      (if (cfg.xRows.isEmpty) Nil
+       else Seq(min(col(orderedOn)).as(LabelCol), sum(lit(1L)).as(NCol)))
 
   private def combineExprs(cfg: StreamKeyCfg): Seq[Column] =
     cfg.aggs.map { s =>
@@ -96,76 +108,71 @@ final class AggStream[K](
         case AggFn.Max   => max(c)
         case AggFn.Sum   => sum(c)
       }).as(s.out)
-    } ++ Seq(min(tbMin).as(tbMin), max(tbMax).as(tbMax))
+    } ++ Seq(min(tbMin).as(tbMin), max(tbMax).as(tbMax)) ++
+      (if (cfg.xRows.isEmpty) Nil
+       else Seq(min(LabelCol).as(LabelCol), sum(NCol).as(NCol)))
 
-  private def readState(k: K): Option[Restart] = {
+  /** `key`'s value in `k`'s result kv; None before its first commit. */
+  private def kvOf(k: K, key: String): Option[String] = {
     val ds = store.get(k)
-    if (!ds.exists) None
-    else ds.kv.get(StateKey).map(Restart.fromJson)
+    if (ds.exists) ds.kv.get(key) else None
   }
 
   /** Process one seed chunk for one key: partial-agg, then a combining
     * upsert on the bin key that folds the partials into the stored
-    * open-bin partials inside the write's single overlap read.
+    * open-bin partials inside the write's single overlap read, bounded
+    * by the key's `stats` from the chunk's stats pass. Count bins
+    * (`xRows`) number rows on from the persisted processed-row count, so
+    * their ids follow from it. With `snapFreq`, one cell per (bin, snap)
+    * is stored (snap_by, also over by_x_rows, ref segmentby.py:712-1028).
     */
   private def processKey(k: K, cfg: StreamKeyCfg, chunk: DataFrame,
-      restart: Restart, extraKv: Map[String, String]): Unit = {
+      stats: OrderedDataset.BatchStats, restart: Restart,
+      extraKv: Map[String, String]): Unit = {
     val data = cfg.filter.map(chunk.filter).getOrElse(chunk)
-    cfg.xRows match {
-      case Some(n) => processKeyXRows(k, cfg, data, n, restart, extraKv)
-      case None    => processKeyTime(k, cfg, data, restart, extraKv)
+    val snap = cfg.snapFreq.toSeq.map(f =>
+      SegmentAgg.timeBin(col(orderedOn), f, cfg.closed, cfg.label).as(SnapCol))
+    val (binned, bin, bounds, rowsKv) = cfg.xRows match {
+      case None => (data, binOf(cfg), stats, Map.empty)
+      case Some(n) =>
+        val seen = kvOf(k, RowsKey).fold(0L)(_.toLong)
+        (SegmentAgg.xRowsBins(data, orderedOn, n, col(tieCol), seen),
+         col("bin_id"), if (stats.rows == 0) stats
+         else stats.copy(min = Some(OrdLong(seen / n)),
+           max = Some(OrdLong((seen + stats.rows - 1) / n))),
+         // the rows kv commits atomically with the data
+         Map(RowsKey -> (seen + stats.rows).toString))
     }
+    val exprs = partialExprs(cfg)
+    store.get(k).writeCombining(binned.groupBy(bin.as(BinCol) +: snap: _*)
+      .agg(exprs.head, exprs.tail: _*), WriteOpts(orderedOn = BinCol,
+      target = target, duplicatesOn = Some(BinCol +: snap.map(_ => SnapCol)),
+      kv = extraKv ++ rowsKv + (StateKey -> restart.toJson)),
+      combineExprs(cfg), bounds)
   }
 
-  /** Count-based bins: global row numbering continues from the persisted
-    * processed-row count; each bin's partial merges like time bins, with
-    * the label (first ordered value) merged via min. With `snapFreq`
-    * set, one cell per (bin, snap) is stored instead (snap_by composed
-    * with by_x_rows, ref segmentby.py:712-1028).
-    */
-  private def processKeyXRows(k: K, cfg: StreamKeyCfg, data: DataFrame,
-      n: Int, restart: Restart, extraKv: Map[String, String]): Unit = {
-    val ds = store.get(k)
-    val rowsSeen =
-      if (ds.exists) ds.kv.get(RowsKey).map(_.toLong).getOrElse(0L) else 0L
-    val binned = SegmentAgg.xRowsBins(data, orderedOn, n, col(tieCol),
-      carryIn = rowsSeen)
-    val groupCols = col("bin_id").as(BinCol) +: cfg.snapFreq.toSeq.map(f =>
-      SegmentAgg.timeBin(col(orderedOn), f, cfg.closed, cfg.label)
-        .as(SnapCol))
-    val exprs = partialExprs(cfg) ++ Seq(
-      min(col(orderedOn)).as(LabelCol), sum(lit(1L)).as(NCol))
-    val partial = binned.groupBy(groupCols: _*)
-      .agg(exprs.head, exprs.tail: _*)
-    // one action: the rows kv commits atomically with the data
-    val chunkRows = data.count()
-    ds.writeCombining(partial, WriteOpts(
-      orderedOn = BinCol, target = target,
-      duplicatesOn = Some(keyCols(cfg)),
-      kv = extraKv ++ Map(StateKey -> restart.toJson,
-        RowsKey -> (rowsSeen + chunkRows).toString)),
-      combineExprs(cfg) ++ Seq(min(LabelCol).as(LabelCol),
-        sum(NCol).as(NCol)))
-  }
+  /** A time key's bin of each seed row. */
+  private def binOf(cfg: StreamKeyCfg): Column =
+    SegmentAgg.timeBin(col(orderedOn), cfg.binFreq, cfg.closed, cfg.label)
 
-  private def processKeyTime(k: K, cfg: StreamKeyCfg, data: DataFrame,
-      restart: Restart, extraKv: Map[String, String]): Unit = {
-    val bin = SegmentAgg.timeBin(col(orderedOn), cfg.binFreq, cfg.closed,
-      cfg.label)
-    val groupCols = bin.as(BinCol) +: cfg.snapFreq.toSeq.map(f =>
-      SegmentAgg.timeBin(col(orderedOn), f, cfg.closed, cfg.label)
-        .as(SnapCol))
-    val partial = data.groupBy(groupCols: _*)
-      .agg(partialExprs(cfg).head, partialExprs(cfg).tail: _*)
-    store.get(k).writeCombining(partial, WriteOpts(
-      orderedOn = BinCol, target = target,
-      duplicatesOn = Some(keyCols(cfg)),
-      kv = extraKv ++ Map(StateKey -> restart.toJson)),
-      combineExprs(cfg))
-  }
+  /** The stats-pass aggregate of every key, in `keys` order: the rows
+    * under its filter and `in(k)`, and their bins' [min, max] (a count
+    * key's bin ids come from its rows instead, in [[processKey]]). */
+  private def keyStatsCol(in: K => Column): Column =
+    struct(keys.toSeq.map { case (k, cfg) =>
+      val sel = cfg.filter.fold(in(k))(in(k) && _)
+      val bin = when(sel, if (cfg.xRows.isDefined) lit(0L) else binOf(cfg))
+      struct(count(bin), min(bin), max(bin))
+    }: _*)
 
-  private def keyCols(cfg: StreamKeyCfg): Seq[String] =
-    BinCol +: cfg.snapFreq.toSeq.map(_ => SnapCol)
+  /** [[keyStatsCol]]'s value, per key. */
+  private def keyStats(r: org.apache.spark.sql.Row)
+      : Map[K, OrderedDataset.BatchStats] =
+    keys.keys.zipWithIndex.map { case (k, j) =>
+      val s = r.getStruct(j)
+      def at(i: Int) = Option(s.get(i)).map(OrdVal.fromAny)
+      k -> OrderedDataset.BatchStats(s.getLong(0), at(1), at(2))
+    }.toMap
 
   /** Run the stream over an iterator of ordered seed chunks
     * (ref aggstream.py:1399-1474: seed as DataFrame or iterable).
@@ -184,7 +191,8 @@ final class AggStream[K](
     // trim to its OWN restart (skipping rows it already folded — a
     // replay would otherwise double-count sums into stored partials).
     val restartByKey = scala.collection.mutable.Map[K, Option[Restart]](
-      keys.keys.map(k => k -> readState(k)).toSeq: _*)
+      keys.keys.map(k =>
+        k -> kvOf(k, StateKey).map(Restart.fromJson)).toSeq: _*)
     def laggiest(rs: Iterable[Restart]): Option[Restart] =
       rs.reduceOption { (a, b) =>
         if (a.v < b.v || (a.v == b.v && !a.exclusive)) a else b
@@ -199,11 +207,8 @@ final class AggStream[K](
     // resume from (its unfolded rows replay through the pre hook; keys
     // already past them trim those rows away).
     var preState: Option[String] = {
-      val withState = keys.keys.toSeq.flatMap { k =>
-        val ds = store.get(k)
-        val p = if (ds.exists) ds.kv.get(PreKey) else None
-        p.map(s => (restartByKey(k), s))
-      }
+      val withState = keys.keys.toSeq.flatMap(k =>
+        kvOf(k, PreKey).map(s => (restartByKey(k), s)))
       val lag = laggiest(withState.flatMap(_._1))
       val candidates = withState.collect {
         case (r, s) if r == lag || lag.isEmpty => s
@@ -218,15 +223,13 @@ final class AggStream[K](
     var remainder: Option[DataFrame] = None
     var cachedPrev: Option[DataFrame] = None // backing cache of `remainder`
 
-    def trimTo(df: DataFrame, r: Option[Restart]): DataFrame = r match {
-      case None => df
-      case Some(r) =>
-        val c = col(orderedOn)
-        val dt = df.schema(orderedOn).dataType
-        df.filter(if (r.exclusive) c > lit(r.v.toLiteralFor(dt))
-                  else c >= lit(r.v.toLiteralFor(dt)))
-    }
-    def trim(df: DataFrame): DataFrame = trimTo(df, restart)
+    // rows past restart `r`; null ordered values are kept for the
+    // chunk's null check to reject
+    def past(r: Option[Restart], dt: DataType): Column =
+      r.fold(lit(true)) { r =>
+        val (c, v) = (col(orderedOn), lit(r.v.toLiteralFor(dt)))
+        c.isNull || (if (r.exclusive) c > v else c >= v)
+      }
 
     // thread-parallel per key (ref joblib fan-out, aggstream.py:83,
     // 1309-1317): each key's partial-agg + combining upsert touches
@@ -257,32 +260,40 @@ final class AggStream[K](
           }
       }
 
-    // `d0` must already have the pre hook applied.
+    // `d0` must already have the pre hook applied. The key stats are
+    // over what each key processes now (its filter, its own trim);
+    // withholding the max-valued block needs the max first.
     def runChunk(d0: DataFrame, isFinal: Boolean): Unit = {
-      val data = trim(d0).persist()
+      val dt = d0.schema(orderedOn).dataType
+      val data = d0.filter(past(restart, dt)).persist()
       var keepCached = false
       try {
-        val st =
-          data.agg(min(orderedOn), max(orderedOn), count(lit(1))).head()
+        val withhold = discardLast && !isFinal
+        val keyIn = (k: K) => past(restartByKey(k), dt)
+        val st = data.agg(min(orderedOn), max(orderedOn), count(lit(1)),
+          count(col(orderedOn)),
+          if (withhold) lit(null) else keyStatsCol(keyIn)).head()
+        OrderedDataset.requireNoNulls(orderedOn, st.getLong(2) - st.getLong(3))
         if (st.getLong(2) > 0) {
           val mn = OrdVal.fromAny(st.get(0))
           val mx = OrdVal.fromAny(st.get(1))
-          val dt = data.schema(orderedOn).dataType
           // withholding the max-valued block leaves rows iff min < max
           val (process, newRemainder, newRestart, hasRows) =
-            if (discardLast && !isFinal) {
+            if (withhold) {
               (data.filter(col(orderedOn) < lit(mx.toLiteralFor(dt))),
                Some(data.filter(col(orderedOn) === lit(mx.toLiteralFor(dt)))),
                Restart(mx, exclusive = false), mn < mx)
             } else (data, None, Restart(mx, exclusive = true), true)
           if (hasRows) {
+            val stats = keyStats(if (!withhold) st.getStruct(4)
+              else process.agg(keyStatsCol(keyIn)).head().getStruct(0))
             val extraKv = preState.map(PreKey -> _).toMap
             // per-key trim: a key AHEAD of the global restart (divergence
             // after a partially-failed fan-out) skips rows it already
             // folded; for aligned keys this is the global trim repeated —
             // a no-op predicate
-            fanOut((k, cfg) => processKey(k, cfg,
-              trimTo(process, restartByKey(k)), newRestart, extraKv))
+            fanOut((k, cfg) => processKey(k, cfg, process.filter(keyIn(k)),
+              stats(k), newRestart, extraKv))
             restart = Some(newRestart)
             keys.keys.foreach(k => restartByKey(k) = Some(newRestart))
           }
@@ -335,25 +346,13 @@ final class AggStream[K](
   def binResults(k: K): DataFrame = {
     val cfg = keys(k)
     val raw = store.get(k).df
-    val hasLabel = cfg.xRows.isDefined
-    (cfg.snapFreq, cfg.xRows) match {
-      case (None, Some(_)) =>
-        raw.select(Seq(col(BinCol), col(LabelCol),
-          col(NCol).cast("long").as(NCol)) ++ aggCasts(cfg): _*)
-      case (None, None) =>
-        raw.select(col(BinCol) +: aggCasts(cfg): _*)
-      case (Some(_), _) =>
-        val extra =
-          if (hasLabel) Seq(min(LabelCol).as(LabelCol),
-            sum(NCol).as(NCol))
-          else Nil
-        val ce = combineExprs(cfg) ++ extra
-        val front = col(BinCol) +:
-          (if (hasLabel) Seq(col(LabelCol), col(NCol).cast("long").as(NCol))
-           else Nil)
-        raw.groupBy(BinCol).agg(ce.head, ce.tail: _*)
-          .select(front ++ aggCasts(cfg): _*)
-    }
+    val ce = combineExprs(cfg)
+    val cells =
+      if (cfg.snapFreq.isEmpty) raw
+      else raw.groupBy(BinCol).agg(ce.head, ce.tail: _*)
+    val front = col(BinCol) +: (if (cfg.xRows.isEmpty) Nil
+      else Seq(col(LabelCol), col(NCol).cast("long").as(NCol)))
+    cells.select(front ++ aggCasts(cfg): _*)
   }
 
   /** Running snapshot frame (ref `snap_res`): one row per stored

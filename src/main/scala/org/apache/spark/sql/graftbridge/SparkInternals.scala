@@ -57,6 +57,55 @@ object SparkInternals {
       ds.queryExecution.toRdd, df.schema, isStreaming = false)
   }
 
+  /** Write `df` as parquet files into the directory `path` in ONE SQL
+    * execution, with `trackers` seeing every row and file the writing
+    * tasks produce — Delta's `TransactionalWrite.writeFiles` pattern.
+    * `options` are the writer options `DataFrameWriter.option` would
+    * take (they reach the Hadoop conf the parquet writer reads);
+    * Spark's own basic tracker runs too, so the tasks' output metrics
+    * are reported as for `df.write.parquet(path)`.
+    */
+  def writeParquet(df: org.apache.spark.sql.DataFrame, path: String,
+      options: Map[String, String],
+      trackers: Seq[org.apache.spark.sql.execution.datasources.WriteJobStatsTracker])
+      : Unit = {
+    import org.apache.spark.sql.execution.datasources._
+    val ds = df.asInstanceOf[
+      org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+    val spark = ds.sparkSession
+    val qe = ds.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe) {
+      val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
+      val committer = org.apache.spark.internal.io.FileCommitProtocol
+        .instantiate(spark.sessionState.conf.fileCommitProtocolClass,
+          java.util.UUID.randomUUID().toString, path)
+      FileFormatWriter.write(spark, qe.executedPlan,
+        new parquet.ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(path, Map.empty, qe.analyzed.output),
+        hadoopConf, Nil, None,
+        new BasicWriteJobStatsTracker(
+          new org.apache.spark.util.SerializableConfiguration(hadoopConf),
+          BasicWriteJobStatsTracker.metrics) +: trackers, options)
+    }: Unit
+  }
+
+  /** Whether `c` always gives the same value for the same row: false
+    * when it holds a non-deterministic function (`rand`, `uuid`, a UDF
+    * marked non-deterministic, …). Functions named but not yet resolved
+    * are looked up in the session's registry first. */
+  def isDeterministic(spark: org.apache.spark.sql.SparkSession, c: Column)
+      : Boolean = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+    val registry = spark.asInstanceOf[
+      org.apache.spark.sql.classic.SparkSession].sessionState.functionRegistry
+    expressionEager(c).transformUp {
+      case f: UnresolvedFunction if f.nameParts.size == 1 =>
+        scala.util.Try(registry.lookupFunction(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(f.nameParts.head),
+          f.arguments)).getOrElse(f)
+    }.deterministic
+  }
+
   /** Deterministically release the storage behind a
     * `localCheckpoint()`ed DataFrame. `Dataset.unpersist` only consults
     * the CacheManager, which does not track checkpoint blocks — they

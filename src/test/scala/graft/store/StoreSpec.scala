@@ -503,8 +503,8 @@ class StoreSpec extends SparkSpec {
     val sites = jobSites {
       ds.write(tsDf((10L until 20L).map(i => (i, 2.0))), keepLast(100))
     }
-    // the stats readback is still there: the matcher sees this file
-    assert(sites.exists(_.is("collect", Here)), sites)
+    // the batch-stats action is still there: the matcher sees this file
+    assert(sites.exists(_.is("head", Here)), sites)
     assert(countJobs(sites).isEmpty, sites)
     assert(inferenceJobs(sites).isEmpty, sites)
     // the tail append adds one file and rewrites none
@@ -547,6 +547,64 @@ class StoreSpec extends SparkSpec {
     assert(countJobs(sites).isEmpty, sites)
     assert(ds.meta.files.size == 2)
     assert(ds.df.agg(sum("v")).head.getDouble(0) == 24 * 1.0 + 24 * 2.0)
+  }
+
+  private def executions(sites: Seq[graft.SparkSpec.JobSite]) =
+    sites.flatMap(_.execution).distinct.size
+
+  test("a tail append is 2 SQL executions, the write's jobs all in one") {
+    val ds = new OrderedDataset(spark, tmpDir("execs-append"))
+    ds.write(tsDf((0L until 10L).map(i => (i, 1.0))), keepLast(100))
+    val sites = jobSites {
+      ds.write(tsDf((10L until 20L).map(i => (i, 2.0))), keepLast(100))
+    }
+    // the batch stats, then the write; no job outside an execution
+    assert(executions(sites) == 2, sites)
+    assert(sites.forall(_.execution.isDefined), sites)
+    // every job materialize starts belongs to the write's execution
+    val mat = sites.filter(_.userFrame.contains("materialize"))
+    assert(mat.nonEmpty && mat.forall(_.is("writeParquet", Here)), sites)
+    assert(mat.flatMap(_.execution).distinct.size == 1, sites)
+    assert(ds.meta.files.map(_.rows) == Seq(10L, 10L))
+  }
+
+  test("a keep-last upsert that needs the dedup count is 3 SQL executions") {
+    val ds = new OrderedDataset(spark, tmpDir("execs-upsert"))
+    ds.write(tsDf((0L until 30L).map(i => (i, 1.0))), keepLast(50))
+    val sites = jobSites {
+      ds.write(tsDf((20L until 41L).map(i => (i, 2.0))), keepLast(50))
+    }
+    assert(countJobs(sites).nonEmpty, sites)
+    assert(executions(sites) == 3, sites)
+    assert(ds.meta.files.map(_.rows) == Seq(41L))
+  }
+
+  test("file lengths come from the sidecar; old sidecars still read") {
+    val dir = tmpDir("bytes")
+    val ds = new OrderedDataset(spark, dir)
+    ds.write(tsDf((0L until 30L).map(i => (i, 1.0))), WriteOpts("t", NRows(10)))
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listed = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+      .map(st => st.getPath.getName -> st.getLen).toMap
+    val m = ds.meta
+    assert(m.files.size == 3)
+    assert(m.files.map(f => f.name -> f.bytes.get).toMap ==
+      m.files.map(f => f.name -> listed(f.name)).toMap)
+    val idx = graft.sources.GraftFileIndex.pinned(spark, dir, m, m.files, None)
+    assert(idx.sizeInBytes == m.files.map(f => listed(f.name)).sum)
+    assert(ds.describe().totalBytes == idx.sizeInBytes)
+    // a sidecar written before lengths were recorded: served from one
+    // directory listing, same lengths, same rows
+    Sidecar.write(spark.sparkContext.hadoopConfiguration, dir,
+      m.copy(files = m.files.map(_.copy(bytes = None))))
+    val old = ds.meta
+    assert(old.files.forall(_.bytes.isEmpty))
+    val oldIdx =
+      graft.sources.GraftFileIndex.pinned(spark, dir, old, old.files, None)
+    assert(oldIdx.sizeInBytes == idx.sizeInBytes)
+    assert(ds.df.count() == 30L)
+    assert(ds.rangeDF(Some(OrdLong(5L)), Some(OrdLong(25L))).count() == 20L)
   }
 
   test("kv metadata add/update/remove") {

@@ -545,10 +545,96 @@ class AggStreamSpec extends SparkSpec {
     for ((a, b) <- Seq((0, 100), (100, 200))) {
       val chunk = chunkOf(tsSeed, a, b)
       val sites = jobSites { mk().agg(Iterator(chunk), discardLast = false) }
-      val writes = sites.filter(s => s.is("parquet", "OrderedDataset.scala")
-        && s.userFrame.contains("materialize"))
+      val writes = sites.filter(_.is("writeParquet", "OrderedDataset.scala"))
       assert(writes.map(_.execution).distinct.size == 3,
         s"chunk $a-$b: $sites")
     }
+  }
+
+  test("a second 3-key chunk is 4 SQL executions: shared stats, 3 writes") {
+    val st = new Store(spark, tmpDir("chunkexecs"), idx)
+    val cfg = StreamKeyCfg(None, "10 minutes", aggs = specs)
+    def mk() = new AggStream(st, "t", "rid",
+      Map("a" -> cfg, "b" -> cfg, "c" -> cfg), NRows(1000))
+    mk().agg(Iterator(chunkOf(tsSeed, 0, 100)), discardLast = false)
+    val second = chunkOf(tsSeed, 100, 200)
+    val sites = jobSites { mk().agg(Iterator(second), discardLast = false) }
+    assert(sites.flatMap(_.execution).distinct.size == 4, sites)
+    val own = sites.filter(_.userFrame.contains("(AggStream.scala:"))
+    assert(own.flatMap(_.execution).distinct.size == 1, sites)
+    assert(mk().results("b").orderBy("bin").collect().toSeq ==
+      batchExpected(tsSeed).toSeq)
+  }
+
+  test("shared key stats: withheld-only rows, filtered count bins " +
+      "across restarts, a key filtered empty") {
+    val st = new Store(spark, tmpDir("keystats"), idx)
+    val odd = col("rid") % 2 === 1
+    def mk() = new AggStream(st, "t", "rid",
+      Map("all" -> StreamKeyCfg(None, "10 minutes", aggs = specs),
+          // rid 99 is chunk [0, 100)'s max-valued block: withheld there
+          "only99" -> StreamKeyCfg(Some(col("rid") === 99), "10 minutes",
+            aggs = specs),
+          "odd" -> StreamKeyCfg(Some(odd), "", aggs = specs, xRows = Some(7)),
+          "none" -> StreamKeyCfg(Some(col("rid") < 0), "10 minutes",
+            aggs = specs)),
+      NRows(1000))
+    var only99AfterFirst: Option[Seq[FileStat]] = None
+    val seed = Iterator(chunkOf(tsSeed, 0, 100)) ++
+      Iterator.single(()).map { _ =>
+        only99AfterFirst = Some(st.get("only99").meta.files)
+        chunkOf(tsSeed, 100, 150)
+      }
+    mk().agg(seed)
+    mk().agg(Iterator(chunkOf(tsSeed, 150, 200))) // restart from state
+    assert(only99AfterFirst.contains(Nil))
+    val s = mk()
+    assert(s.results("only99").orderBy("bin").collect().toSeq ==
+      batchExpected(tsSeed.filter(col("rid") === 99)).toSeq)
+    assert(s.results("all").orderBy("bin").collect().toSeq ==
+      batchExpected(tsSeed).toSeq)
+    val expOdd = SegmentAgg.xRowsBins(tsSeed.filter(odd), "t", 7, col("rid"))
+      .groupBy(col("bin_id").as("bin"))
+      .agg(min("t").as("bin_label"), count(lit(1)).as("n_rows") +:
+        SegmentAgg.aggExprs(specs, col("rid")): _*)
+      .orderBy("bin").collect().toSeq
+    assert(s.binResults("odd").orderBy("bin").collect().toSeq == expOdd)
+    assert(st.get("odd").kv(AggStream.RowsKey) == "100")
+    val none = st.get("none")
+    assert(none.exists && none.meta.files.isEmpty)
+    assert(none.kv(AggStream.StateKey) ==
+      st.get("all").kv(AggStream.StateKey))
+  }
+
+  test("a null seed timestamp is rejected before any key commits") {
+    val st = new Store(spark, tmpDir("nullts"), idx)
+    def mk() = new AggStream(st, "t", "rid",
+      Map("a" -> StreamKeyCfg(None, "10 minutes", aggs = specs),
+          "r" -> StreamKeyCfg(None, "", aggs = specs, xRows = Some(30))),
+      NRows(1000))
+    mk().agg(Iterator(chunkOf(tsSeed, 0, 100)))
+    val gens = Seq("a", "r").map(k => st.get(k).generation)
+    val withNull = chunkOf(tsSeed, 100, 150).unionByName(
+      Seq((Option.empty[java.time.LocalDateTime], 1.0, 999L))
+        .toDF("t", "v", "rid"))
+    for (discardLast <- Seq(true, false)) {
+      val e = intercept[IllegalArgumentException] {
+        mk().agg(Iterator(withNull), discardLast = discardLast)
+      }
+      assert(e.getMessage.contains("null"), e)
+      assert(Seq("a", "r").map(k => st.get(k).generation) == gens)
+    }
+  }
+
+  test("a non-deterministic key filter is rejected at construction") {
+    val st = new Store(spark, tmpDir("nondet"), idx)
+    for (f <- Seq(rand() > 0.5, expr("rand() > 0.5"), col("v") > uuid()))
+      intercept[IllegalArgumentException] {
+        new AggStream(st, "t", "rid",
+          Map("k" -> StreamKeyCfg(Some(f), "10 minutes", aggs = specs)))
+      }
+    new AggStream(st, "t", "rid", Map("k" -> StreamKeyCfg(
+      Some(col("v") > 1 && expr("abs(rid) > 2")), "10 minutes",
+      aggs = specs)))
   }
 }
