@@ -2,6 +2,11 @@ package graft.store
 
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.graftbridge.{BoundLiteral, SparkInternals}
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Value of an `ordered_on` column as tracked by the stats sidecar.
   * The reference compares ordered_on values as int, float or Timestamp
@@ -19,38 +24,42 @@ sealed trait OrdVal extends Ordered[OrdVal] {
     // java.lang.String.compareTo (UTF-16 code units) diverges for
     // supplementary characters and would mis-prune
     case (OrdStr(a), OrdStr(b))       =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(a)
-        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
     case _ => throw new IllegalArgumentException(
       s"incomparable OrdVal types: $typeTag vs ${that.typeTag}")
   }
 
-  /** Literal usable in Spark Column predicates against a TIMESTAMP_NTZ
-    * (or numeric) column. For session-timezone TIMESTAMP columns use
-    * [[toLiteralFor]] — an NTZ literal against an LTZ column is coerced
-    * through the SESSION zone and lands off by the zone offset.
+  /** This value as the bound of a predicate on a column of type `dt`
+    * (`col(c) >= v.bound(dt)`): the one way an `OrdVal` becomes a
+    * `Column` in the engine.
+    *
+    * The literal is a [[org.apache.spark.sql.graftbridge.BoundLiteral]]
+    * in the column's own type, so its generated code reads the value
+    * from the stage's references: a second read of the same shape with
+    * other bounds reuses the compiled classes instead of compiling new
+    * ones. It is still a `Literal`, so parquet pushdown, file pruning
+    * and metadata aggregates see the same predicate as a plain literal.
+    * Timestamps are µs since epoch in either timestamp type (an LTZ
+    * column compares the true instant, under any session timezone).
+    *
+    * A value the column's type cannot hold exactly (an int column's
+    * out-of-range long, a double with no exact float) stays a plain
+    * literal in the value's own type, compared through the analyzer's
+    * usual widening, as is any other type pair.
     */
-  def toLiteral: Any = this match {
-    case OrdLong(v)   => v
-    case OrdDouble(v) => v
-    case OrdStr(v)    => v
-    case OrdTs(us)    => java.time.LocalDateTime.ofEpochSecond(
-      Math.floorDiv(us, 1000000L), (Math.floorMod(us, 1000000L) * 1000).toInt,
-      java.time.ZoneOffset.UTC)
-  }
-
-  /** Literal matched to the actual column type: `Instant` for LTZ
-    * TIMESTAMP (true epoch instant — correct under any session
-    * timezone), [[toLiteral]] otherwise.
-    */
-  def toLiteralFor(dt: org.apache.spark.sql.types.DataType): Any =
-    (this, dt) match {
-      case (OrdTs(us), org.apache.spark.sql.types.TimestampType) =>
-        java.time.Instant.ofEpochSecond(
-          Math.floorDiv(us, 1000000L),
-          Math.floorMod(us, 1000000L) * 1000L)
-      case _ => toLiteral
-    }
+  def bound(dt: DataType): Column = SparkInternals.column((this, dt) match {
+    case (OrdLong(v), LongType)                    => new BoundLiteral(v, dt)
+    case (OrdLong(v), IntegerType) if v.isValidInt => new BoundLiteral(v.toInt, dt)
+    case (OrdDouble(v), DoubleType)                => new BoundLiteral(v, dt)
+    case (OrdDouble(v), FloatType) if v.toFloat.toDouble == v =>
+      new BoundLiteral(v.toFloat, dt)
+    case (OrdTs(us), TimestampType | TimestampNTZType) =>
+      new BoundLiteral(us, dt)
+    case (OrdLong(v), _)   => Literal(v, LongType)
+    case (OrdDouble(v), _) => Literal(v, DoubleType)
+    case (OrdTs(us), _)    => Literal(us, TimestampNTZType)
+    case (OrdStr(v), _)    => Literal(UTF8String.fromString(v), StringType)
+  })
 }
 final case class OrdLong(v: Long) extends OrdVal { def typeTag = "long" }
 final case class OrdDouble(v: Double) extends OrdVal { def typeTag = "double" }

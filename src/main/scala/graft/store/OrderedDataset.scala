@@ -300,7 +300,10 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
 
   /** Zone-map-pruned range scan [lo, hiExcl) — files are selected from
     * sidecar stats without touching parquet footers
-    * (ref iter_intersections.py:136-151; SURVEY §4).
+    * (ref iter_intersections.py:136-151; SURVEY §4). The bounds enter
+    * the plan through [[OrdVal.bound]]: they push down to parquet like
+    * plain literals, and a later read of the same dataset with other
+    * bounds reuses the compiled classes of the first.
     */
   def rangeDF(lo: Option[OrdVal], hiExcl: Option[OrdVal]): DataFrame =
     rangeDFOf(meta, lo, hiExcl)
@@ -311,10 +314,8 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
     var d =
       filesDFOf(m, m.files.filter(GraftFileIndex.inRange(_, lo, hiExcl)))
     val dt = d.schema(m.orderedOn).dataType
-    lo.foreach(l =>
-      d = d.filter(col(m.orderedOn) >= lit(l.toLiteralFor(dt))))
-    hiExcl.foreach(h =>
-      d = d.filter(col(m.orderedOn) < lit(h.toLiteralFor(dt))))
+    lo.foreach(l => d = d.filter(col(m.orderedOn) >= l.bound(dt)))
+    hiExcl.foreach(h => d = d.filter(col(m.orderedOn) < h.bound(dt)))
     d
   }
 
@@ -946,8 +947,8 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
       val d0 = filesDFOf(m, partial)
       val dt = d0.schema(m.orderedOn).dataType
       val survive = (
-        lo.map(l => col(m.orderedOn) < lit(l.toLiteralFor(dt))),
-        hiExcl.map(h => col(m.orderedOn) >= lit(h.toLiteralFor(dt)))) match {
+        lo.map(l => col(m.orderedOn) < l.bound(dt)),
+        hiExcl.map(h => col(m.orderedOn) >= h.bound(dt))) match {
         case (Some(a), Some(b)) => a || b
         case (Some(a), None)    => a
         case (None, Some(b))    => b
@@ -1283,7 +1284,7 @@ final class OrderedDataset(val spark: SparkSession, val dir: String) {
           .map(r => OrdVal.fromAny(r.get(0))).sorted
         require(periods.nonEmpty, "no rows to materialize")
         val pidEntries = periods.zipWithIndex.flatMap { case (pv, i) =>
-          Seq(lit(pv.toLiteral), lit(i))
+          Seq(pv.bound(TimestampNTZType), lit(i))
         }
         val withPid = data.withColumn("__pid",
           element_at(map(pidEntries.toSeq: _*), p))

@@ -252,10 +252,11 @@ final class Store[K](val spark: SparkSession, val basepath: String,
     require(ks.distinct.size == ks.size,
       s"keyOf must be injective over shard indices 0..${ranges.size - 1}" +
         s", got duplicate keys in $ks")
+    val dt = df.schema(ordCol).dataType
     transaction(ks) { dss =>
       ranges.zipWithIndex.foreach { case ((lo, hi), i) =>
-        val pred = (lo.map(l => col(ordCol) >= lit(l)) ++
-          hi.map(h => col(ordCol) < lit(h)))
+        val pred = (lo.map(l => col(ordCol) >= OrdVal.fromAny(l).bound(dt)) ++
+          hi.map(h => col(ordCol) < OrdVal.fromAny(h).bound(dt)))
           .reduceOption(_ && _).getOrElse(lit(true))
         dss(ks(i)).write(df.filter(pred), opts.copy(kv = opts.kv ++ Map(
           "graft.shard.index" -> i.toString,
@@ -289,23 +290,23 @@ final class Store[K](val spark: SparkSession, val basepath: String,
     }
   }
 
-  /** Parse a kv-recorded shard boundary back to a literal comparable
-    * with the ordered COLUMN's type (the inverse of [[shardedWrite]]'s
+  /** Parse a kv-recorded shard boundary back to the value it stamps
+    * in the ordered COLUMN's type (the inverse of [[shardedWrite]]'s
     * toString stamp; both `LocalDateTime.toString` ISO and
     * `java.sql.Timestamp.toString` space-separated forms accepted for
     * the timestamp types).
     */
-  private def boundLiteral(s: String,
-      dt: org.apache.spark.sql.types.DataType): Any = {
+  private def shardBound(s: String,
+      dt: org.apache.spark.sql.types.DataType): OrdVal = {
     import org.apache.spark.sql.types._
     def ldt = try java.time.LocalDateTime.parse(s)
       catch { case _: java.time.format.DateTimeParseException =>
         java.sql.Timestamp.valueOf(s).toLocalDateTime }
     dt match {
-      case LongType | IntegerType       => s.toLong
-      case DoubleType | FloatType       => s.toDouble
-      case TimestampNTZType             => ldt
-      case TimestampType                =>
+      case LongType | IntegerType       => OrdLong(s.toLong)
+      case DoubleType | FloatType       => OrdDouble(s.toDouble)
+      case TimestampNTZType             => OrdVal.fromAny(ldt)
+      case TimestampType                => OrdVal.fromAny(
         try java.time.Instant.parse(s)
         catch { case _: java.time.format.DateTimeParseException =>
           // java.sql.Timestamp.toString renders the instant as JVM
@@ -313,7 +314,7 @@ final class Store[K](val spark: SparkSession, val basepath: String,
           // the SAME zone. (Reinterpreting via toLocalDateTime + UTC
           // would shift every bound by the zone offset on non-UTC JVMs
           // and route boundary-adjacent appends to the wrong shard.)
-          java.sql.Timestamp.valueOf(s).toInstant }
+          java.sql.Timestamp.valueOf(s).toInstant })
       case other => throw new IllegalArgumentException(
         s"unsupported ordered_on type $other for shard bounds")
     }
@@ -411,9 +412,9 @@ final class Store[K](val spark: SparkSession, val basepath: String,
     transaction(chain.map(_._1)) { dss =>
       chain.foreach { case (k, lo, hi) =>
         val pred = (Option(lo).filter(_.nonEmpty)
-            .map(l => col(ordCol) >= lit(boundLiteral(l, dt))) ++
+            .map(l => col(ordCol) >= shardBound(l, dt).bound(dt)) ++
           Option(hi).filter(_.nonEmpty)
-            .map(h => col(ordCol) < lit(boundLiteral(h, dt))))
+            .map(h => col(ordCol) < shardBound(h, dt).bound(dt)))
           .reduceOption(_ && _).getOrElse(lit(true))
         val d = dss(k)
         // re-check the routing preconditions INSIDE the per-shard

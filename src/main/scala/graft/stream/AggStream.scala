@@ -227,7 +227,7 @@ final class AggStream[K](
     // chunk's null check to reject
     def past(r: Option[Restart], dt: DataType): Column =
       r.fold(lit(true)) { r =>
-        val (c, v) = (col(orderedOn), lit(r.v.toLiteralFor(dt)))
+        val (c, v) = (col(orderedOn), r.v.bound(dt))
         c.isNull || (if (r.exclusive) c > v else c >= v)
       }
 
@@ -265,6 +265,9 @@ final class AggStream[K](
     // withholding the max-valued block needs the max first.
     def runChunk(d0: DataFrame, isFinal: Boolean): Unit = {
       val dt = d0.schema(orderedOn).dataType
+      // the store's named error for an unsupported ordered type (a
+      // string has no restart index), before any key writes
+      OrderedDataset.typeTag(dt): Unit
       val data = d0.filter(past(restart, dt)).persist()
       var keepCached = false
       try {
@@ -280,8 +283,8 @@ final class AggStream[K](
           // withholding the max-valued block leaves rows iff min < max
           val (process, newRemainder, newRestart, hasRows) =
             if (withhold) {
-              (data.filter(col(orderedOn) < lit(mx.toLiteralFor(dt))),
-               Some(data.filter(col(orderedOn) === lit(mx.toLiteralFor(dt)))),
+              (data.filter(col(orderedOn) < mx.bound(dt)),
+               Some(data.filter(col(orderedOn) === mx.bound(dt))),
                Restart(mx, exclusive = false), mn < mx)
             } else (data, None, Restart(mx, exclusive = true), true)
           if (hasRows) {
@@ -501,6 +504,8 @@ object AggStream {
         case OrdLong(l) => l.toString
         case OrdDouble(d) => d.toString
         case OrdTs(us) => us.toString
+        case OrdStr(_) => throw new IllegalArgumentException(
+          "a restart index cannot be a string")
       }
       s"""{"t":"$t","v":$raw,"excl":$exclusive}"""
     }

@@ -14,6 +14,54 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
+  /** Classes Spark's code generator compiles while `op` runs, JVM-wide
+    * (`CodegenMetrics`' compilation histogram; specs run one at a
+    * time). A class compiled on the driver and again in a task thread
+    * counts twice, as the codegen cache keys by class loader too. Warm
+    * the op up first to count only what its steady state compiles. */
+  def compiles(op: => Unit): Long = {
+    val m = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val c0 = m.getCount
+    op
+    m.getCount - c0
+  }
+
+  /** Source of every class Spark's code generator compiles while `op`
+    * runs, on any thread, from its DEBUG log of each compile (kept out
+    * of the console). Warm the op up first to see only what its steady
+    * state compiles. */
+  def compiledSources(op: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val name = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("compiledSources", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.DEBUG)
+          got.add(e.getMessage.getFormattedMessage): Unit
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val cfg = ctx.getConfiguration
+    val before = Option(cfg.getLoggers.get(name))
+    val lc = new LoggerConfig(name, Level.DEBUG, false)
+    lc.addAppender(appender, Level.DEBUG, null)
+    cfg.removeLogger(name)
+    cfg.addLogger(name, lc)
+    ctx.updateLoggers()
+    try op
+    finally {
+      cfg.removeLogger(name)
+      before.foreach(cfg.addLogger(name, _))
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    got.toArray(Array.empty[String]).toSeq
+  }
+
   /** Call sites of the Spark jobs `body` starts on this thread, in
     * start order. Jobs of concurrently running specs are told apart by
     * a job group private to this call. A job run for a SQL execution

@@ -279,7 +279,7 @@ class ShardedWriteSpec extends SparkSpec {
     // With java8API DISABLED (the Spark ≤3 default; dynamic conf)
     // shardedWrite stamps TimestampType bounds as
     // java.sql.Timestamp.toString — wall time in the JVM DEFAULT zone.
-    // boundLiteral must reverse it in the same zone; reinterpreting
+    // shardBound must reverse it in the same zone; reinterpreting
     // that wall time as UTC shifts the bound by the zone offset and
     // routes every row within the offset of a boundary into the wrong
     // shard. Asia/Kolkata (+05:30) also catches half-hour errors.

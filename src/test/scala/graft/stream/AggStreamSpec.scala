@@ -637,4 +637,59 @@ class AggStreamSpec extends SparkSpec {
       Some(col("v") > 1 && expr("abs(rid) > 2")), "10 minutes",
       aggs = specs)))
   }
+
+  test("a string-ordered seed is rejected before any key writes") {
+    val st = new Store(spark, tmpDir("strord"), idx)
+    def mk() = new AggStream(st, "t", "rid",
+      Map("a" -> StreamKeyCfg(None, "10 minutes", aggs = specs),
+          "r" -> StreamKeyCfg(None, "", aggs = specs, xRows = Some(30))),
+      NRows(1000))
+    def strChunk(a: Int, b: Int) =
+      chunkOf(tsSeed, a, b).withColumn("t", col("t").cast("string"))
+    for (discardLast <- Seq(true, false)) {
+      val e = intercept[IllegalArgumentException] {
+        mk().agg(Iterator(strChunk(0, 100)), discardLast = discardLast)
+      }
+      assert(e.getMessage.contains("ordered_on type"), e)
+      assert(Seq("a", "r").forall(k => !st.get(k).exists))
+    }
+    // keys already holding results are left as they were
+    mk().agg(Iterator(chunkOf(tsSeed, 0, 100)))
+    val gens = Seq("a", "r").map(k => st.get(k).generation)
+    intercept[IllegalArgumentException] {
+      mk().agg(Iterator(strChunk(100, 150)))
+    }
+    assert(Seq("a", "r").map(k => st.get(k).generation) == gens)
+  }
+
+  test("a chunk compiles no class that holds its restart value") {
+    val st = new Store(spark, tmpDir("restartcode"), idx)
+    def mk() = new AggStream(st, "t", "rid",
+      Map("a" -> StreamKeyCfg(None, "10 minutes", aggs = specs),
+          "r" -> StreamKeyCfg(None, "", aggs = specs, xRows = Some(30))),
+      NRows(1000))
+    // the first chunk has no restart; the second warms the trimmed plans
+    mk().agg(Iterator(chunkOf(tsSeed, 0, 60)))
+    mk().agg(Iterator(chunkOf(tsSeed, 60, 120)))
+    val restart = AggStream.Restart.fromJson(st.get("a").kv(AggStream.StateKey))
+    val next = chunkOf(tsSeed, 120, 180)
+    val nextMax = OrdVal.fromAny(next.agg(max("t")).head().get(0))
+    // a plain literal inlines as a Java constant: the capture's control
+    val control = 987654321987L
+    val sources = compiledSources {
+      // the restart trim, then the withhold split at the chunk's max and
+      // the final flush restarting from it
+      mk().agg(Iterator(next))
+      spark.range(3).filter(col("id") =!= lit(control)).count(): Unit
+    }
+    assert(sources.exists(_.contains(s"${control}L")), sources.size)
+    val held = Seq(restart.v, nextMax).collect { case OrdTs(us) => s"${us}L" }
+    assert(held.size == 2)
+    assert(!sources.exists(src => held.exists(src.contains)),
+      sources.filter(src => held.exists(src.contains)).mkString("\n"))
+    // the next chunk's rows still fold in exactly
+    mk().agg(Iterator(chunkOf(tsSeed, 180, 200)))
+    assert(mk().results("a").orderBy("bin").collect().toSeq ==
+      batchExpected(tsSeed).toSeq)
+  }
 }
